@@ -14,8 +14,7 @@ import org.apache.spark.sql.functions._
   * subset — targeted re-measurement without the full suite)
   */
 object Soak {
-  // package-visible: SoakOrder replays this list as session load
-  private[graft] val queries = Seq(
+  private val queries = Seq(
     "t1_new_user_fix", "t2_uv_dedup", "t3_bounce_detect",
     "a1_product_stats", "a2_visitor_stats", "a8_weighted_score",
     "w_session_window", "a13_retention", "j6_asof_join",

@@ -17,7 +17,7 @@ object Tables {
     * catalog table gives a real deployment for free. Contract: a
     * table file must not be OVERWRITTEN after it has been read in the
     * same session (the cached file index would go stale) — every
-    * in-repo writer (Soak.blowUp, SoakQ20, test fixtures) writes a
+    * in-repo writer (Soak.blowUp, test fixtures) writes a
     * fresh dir once before its first read; [[invalidate]] is the
     * escape hatch for anything else. Keys hold the session reference,
     * so entries die with the JVM; sessions per JVM are few and the

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupStateTimeout, ListState, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig}
+import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig}
 
 /** One declared pattern stage: events matching `cond`, repeated `reps`
   * times. `strict` = an unmatched event KILLS a run waiting on this
@@ -27,7 +27,7 @@ final case class CepStage(name: String, cond: Ev => Boolean, reps: Int,
   * `gmall-realtime/.../app/dwm/UserJumpDetailApp.java:57-86`; the
   * `begin/next` two-stage variant
   * `app/testt/dwm/Dwm_Jump_Detail.java:59-71`) re-expressed as a
-  * builder compiled onto `flatMapGroupsWithState` by [[Cep.pattern]].
+  * builder compiled onto `transformWithState` by [[Cep.patternTws]].
   *
   * Contiguity is per stage: `next` is STRICT (an event that matches
   * the run's next condition advances it, any other event kills it —
@@ -129,13 +129,11 @@ object CepPattern {
   * with the field defaulted to None, Avro state encoding). */
 final case class CepRun(events: Seq[Ev], admittedAtWm: Option[Long] = None)
 
-/** [[Cep.pattern]]'s buffer-and-sort state machine on Spark 4's
+/** [[Cep.patternTws]]'s buffer-and-sort state machine on Spark 4's
   * `transformWithState` — the forward-path state API (native timers via
   * registerTimer/handleExpiredTimer, typed column-family state,
-  * RocksDB-backed, schema-evolvable) replacing the deprecated-direction
-  * `flatMapGroupsWithState` compilation. Semantics are IDENTICAL to the
-  * legacy form and parity-tested in StreamingSpec across the
-  * strict/relaxed/timeout/out-of-order branches.
+  * RocksDB-backed, schema-evolvable). StreamingSpec pins its output on
+  * the strict/relaxed/timeout/out-of-order branches.
   *
   * State layout per key: `pending` (events the watermark has not passed
   * — bounded by the watermark delay) and `partials` (live partial runs
@@ -253,12 +251,12 @@ class CepProcessor[Out](
 
 object Cep {
 
-  /** Structural checks shared by both compilations. The notNext rules
+  /** Structural checks on a compiled pattern. The notNext rules
     * are what keep run state position-free (see [[step]]): an
     * assertion chain is always resolved by the single event that feeds
     * the strict stage after it, so a run never RESTS mid-negation and
     * its evaluation pointer stays a pure function of its matched-event
-    * count — no schema change to either engine's run state. */
+    * count — no schema change to the run state. */
   private[streaming] def validate(conds: Vector[CepStage]): Unit = {
     require(conds.nonEmpty, "empty pattern")
     require(!conds.head.negated, "pattern cannot begin with notNext")
@@ -303,12 +301,13 @@ object Cep {
     else (None, !stage.strict)
   }
 
-  /** Run `pat` per key over the event stream. Complete matches map
-    * through `select` (stage name → matched events, in match order);
-    * partial runs whose within-window closes map through `onTimeout`
-    * (the CEP timeout side output — both branches land in ONE output
-    * stream, the `select.union(sideOutput)` the reference performs
-    * explicitly).
+  /** Run `pat` per key over the event stream on `transformWithState`
+    * (RocksDB-only by Spark's own TWS check; see [[CepProcessor]]).
+    * Complete matches map through `select` (stage name → matched
+    * events, in match order); partial runs whose within-window closes
+    * map through `onTimeout` (the CEP timeout side output — both
+    * branches land in ONE output stream, the `select.union(sideOutput)`
+    * the reference performs explicitly).
     *
     * Ordering: strict contiguity is an EVENT-TIME property, but
     * micro-batches deliver events in arrival order — an event inside
@@ -324,7 +323,7 @@ object Cep {
     * buffer plus the live partial runs — both bounded by the watermark
     * delay and the within-window respectively, sharded across
     * executors by key hash like every keyed operator here. */
-  def pattern[Out: Encoder](
+  def patternTws[Out: Encoder](
       ds: Dataset[Ev],
       pat: CepPattern,
       select: Map[String, Seq[Ev]] => Out,
@@ -337,94 +336,6 @@ object Cep {
     // evicted — per-key state would grow without bound on a stream of
     // stage-1 matches. The reference always bounds its patterns; so
     // does this engine.
-    require(conds.length == 1 || pat.withinMs.isDefined,
-      "a multi-stage CepPattern requires within(...): unbounded patterns would accumulate state forever")
-    val within = pat.withinMs
-    implicit val stateEnc: Encoder[(List[Ev], List[List[Ev]])] =
-      Encoders.kryo[(List[Ev], List[List[Ev]])]
-
-    def grouped(run: List[Ev]): Map[String, Seq[Ev]] =
-      conds.filterNot(_.negated).map(_.name).zip(run).groupBy(_._1)
-        .map { case (k, v) => k -> v.map(_._2).toSeq }
-    val concrete = conds.count(!_.negated)
-
-    ds.withWatermark("ts", watermark)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[(List[Ev], List[List[Ev]]), Out](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (_: Long, events: Iterator[Ev],
-            state: org.apache.spark.sql.streaming.GroupState[(List[Ev], List[List[Ev]])]) =>
-          val out = List.newBuilder[Out]
-          val wm = state.getCurrentWatermarkMs()
-
-          def expire(partials: List[List[Ev]], nowMs: Long): List[List[Ev]] =
-            within match {
-              case Some(w) =>
-                val (dead, alive) = partials.partition(p => nowMs - p.head.ts.getTime > w)
-                dead.foreach(p => onTimeout(p).foreach(out += _))
-                alive
-              case None => partials
-            }
-
-          var (pending, partials) = state.getOption.getOrElse((Nil, Nil))
-          // new arrivals join the buffer (empty on a pure timer firing)
-          pending = pending ++ events
-          // only events the watermark has passed are safe to order:
-          // anything newer could still be preceded by an in-flight
-          // earlier event, so it stays buffered
-          val (ready, waiting) = pending.partition(_.ts.getTime <= wm)
-          for (e <- ready.sortBy(e => (e.ts.getTime, e.event_id))) {
-            // runs whose window closed before e cannot accept it
-            partials = expire(partials, e.ts.getTime)
-            val advanced = List.newBuilder[List[Ev]]
-            def emitOrKeep(next: List[Ev]): Unit =
-              if (next.length == concrete) out += select(grouped(next))
-              else advanced += next
-            for (p <- partials) {
-              val (adv, stays) = Cep.step(conds, p, e)
-              adv.foreach(emitOrKeep)
-              // relaxed skip, or followedByAny keep-behind; a strict
-              // miss or a matched notNext assertion kills the run
-              if (stays) advanced += p
-            }
-            if (conds.head.cond(e)) emitOrKeep(List(e)) // every event may start a run
-            partials = advanced.result()
-          }
-          // deadlines the watermark itself has passed: no event <= wm
-          // remains to extend these runs, and any later one would
-          // expire them anyway
-          partials = expire(partials, wm)
-          if (partials.isEmpty && waiting.isEmpty) {
-            if (state.exists) state.remove()
-          } else {
-            state.update((waiting, partials))
-            // wake when the watermark reaches the next buffered event
-            // or the earliest run deadline, whichever comes first
-            val wakeAt =
-              waiting.map(_.ts.getTime) ++
-                within.toList.flatMap(w => partials.map(_.head.ts.getTime + w))
-            if (wakeAt.nonEmpty)
-              state.setTimeoutTimestamp(math.max(wakeAt.min, wm + 1))
-          }
-          out.result().iterator
-      }
-  }
-
-  /** [[pattern]] on `transformWithState` — the same contract (complete
-    * matches through `select`, expired partials through `onTimeout`,
-    * buffer-and-sort event-time ordering) compiled onto the forward
-    * state API instead of the deprecated-direction
-    * `flatMapGroupsWithState`. RocksDB-only by Spark's own TWS check —
-    * which is also the 100 TB state path. See [[CepProcessor]]. */
-  def patternTws[Out: Encoder](
-      ds: Dataset[Ev],
-      pat: CepPattern,
-      select: Map[String, Seq[Ev]] => Out,
-      onTimeout: Seq[Ev] => Option[Out],
-      watermark: String = "1 second"): Dataset[Out] = {
-    import ds.sparkSession.implicits._
-    val conds = pat.expanded
-    validate(conds)
     require(conds.length == 1 || pat.withinMs.isDefined,
       "a multi-stage CepPattern requires within(...): unbounded patterns would accumulate state forever")
     ds.withWatermark("ts", watermark)

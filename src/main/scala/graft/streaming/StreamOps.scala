@@ -4,7 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState, GroupStateTimeout, ListState, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.streaming.{ExpiredTimerInfo, ListState, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
 /** Has-seen flag for [[StreamOps.newUserFixTws]]: one ValueState[Boolean]
   * per user — the minimal transformWithState state machine. */
@@ -102,7 +102,9 @@ class UvDedupProcessor(ttl: TTLConfig)
     val stored = seenDays.get()
     while (stored.hasNext) seen += stored.next().day
     rows.toSeq.sortBy(e => (e.ts.getTime, e.event_id)).flatMap { e =>
-      // UTC day boundary — matches uvDedup and the batch to_date analog
+      // day boundary in UTC, matching the engine's pinned session
+      // timezone (NOT the JVM default zone, which would diverge from the
+      // batch to_date analog)
       val day = e.ts.toInstant.atZone(java.time.ZoneOffset.UTC)
         .toLocalDate.toString
       if (seen.contains(day)) None
@@ -239,75 +241,22 @@ case class Ev(
   * streaming capability with real keyed state, watermarks and timeouts
   * (exercised via MemoryStream in ScalaTest).
   *
+  * The keyed record-at-a-time operators (T1/T2/T3) run on Spark 4's
+  * `transformWithState`, whose state lives in the RocksDB state store
+  * provider (Spark refuses any other).
+  *
   * Scale notes: all operators are keyed — state lives partitioned by
   * key in the state store, so a 1000-executor cluster shards it by the
   * groupBy hash. No operator holds unbounded state: T1 keeps one
-  * boolean per key, T2 one date-set per key with a TTL timeout, T3 one
-  * pending event per key with an event-time timeout.
+  * boolean per key, T2 one list of seen days per key under a state
+  * TTL, T3 the sub-watermark event buffer and the within()-bounded
+  * partial runs per key under an event-time timer.
   */
 object StreamOps {
 
   /** T1 — new-user correction (`app/dwd/BaseLogApp.java:72-101`):
     * first event per user keeps is_new=1, all later ones are rewritten
-    * to 0. State: has-seen flag per key. */
-  def newUserFix(ds: Dataset[Ev]): Dataset[Ev] = {
-    import ds.sparkSession.implicits._
-    ds.groupByKey(_.user_id)
-      .flatMapGroupsWithState[Boolean, Ev](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_: Long, events: Iterator[Ev], state: GroupState[Boolean]) =>
-          val sorted = events.toSeq.sortBy(e => (e.ts.getTime, e.event_id))
-          val out = sorted.iterator.map { e =>
-            val seen = state.getOption.getOrElse(false)
-            if (!seen) state.update(true)
-            e.copy(is_new = if (seen) 0 else 1)
-          }
-          out
-      }
-  }
-
-  /** T2 — UV/first-visit-of-day dedup with 24 h state TTL
-    * (`app/dwm/UniqueVisitApp.java:49-88`): emit only the first event
-    * per (user, day). State: set of seen dates, evicted wholesale by a
-    * processing-time timeout (the reference's OnCreateAndWrite TTL). */
-  def uvDedup(ds: Dataset[Ev], ttlMs: Option[Long] = Some(24L * 3600 * 1000)): Dataset[Ev] = {
-    import ds.sparkSession.implicits._
-    // TTL enabled → processing-time timeout evicts idle keys (the
-    // reference's 24 h OnCreateAndWrite TTL). Note: a pending
-    // processing-time timeout keeps the no-data micro-batch loop alive,
-    // so tests that drain with processAllAvailable pass ttlMs=None.
-    val timeoutConf =
-      if (ttlMs.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    ds.groupByKey(_.user_id)
-      .flatMapGroupsWithState[Set[String], Ev](OutputMode.Append, timeoutConf) {
-        (_: Long, events: Iterator[Ev], state: GroupState[Set[String]]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            var seen = state.getOption.getOrElse(Set.empty[String])
-            val out = events.toSeq.sortBy(e => (e.ts.getTime, e.event_id)).flatMap { e =>
-              // day boundary in UTC, matching the engine's pinned
-              // session timezone (NOT the JVM default zone, which
-              // would diverge from the batch to_date analog)
-              val day = e.ts.toInstant.atZone(java.time.ZoneOffset.UTC)
-                .toLocalDate.toString
-              if (seen.contains(day)) None
-              else { seen += day; Some(e) }
-            }
-            state.update(seen)
-            ttlMs.foreach(state.setTimeoutDuration)
-            out.iterator
-          }
-      }
-  }
-
-  /** T1 on `transformWithState` — [[newUserFix]]'s contract (first
-    * event per user keeps is_new=1, later ones rewritten to 0) as a
-    * ValueState[Boolean] processor. With [[uvDedupTws]] this pins the
-    * forward-path pattern for BOTH state shapes the engine uses
-    * (scalar flag, TTL'd collection); parity proven in StreamingSpec. */
+    * to 0. State: one has-seen ValueState[Boolean] per key. */
   def newUserFixTws(ds: Dataset[Ev]): Dataset[Ev] = {
     import ds.sparkSession.implicits._
     ds.groupByKey(_.user_id)
@@ -332,17 +281,14 @@ object StreamOps {
         TimeMode.EventTime(), OutputMode.Append())
   }
 
-  /** T2 on Spark 4's `transformWithState` — the forward path for
-    * arbitrary keyed state (native per-state TTL, timers, state schema
-    * evolution; replaces the deprecated-direction
-    * `flatMapGroupsWithState`). Same contract as [[uvDedup]]: emit only
-    * the first event per (user, UTC day); the reference's 24 h
-    * OnCreateAndWrite TTL (`app/dwm/UniqueVisitApp.java:57-59`) maps
-    * 1:1 onto `TTLConfig(Duration.ofHours(24))` — eviction is handled
-    * by the state store itself, no hand-rolled timeout dance. Requires
-    * the RocksDB state store provider (the 100 TB state path; enforced
-    * by Spark, not a choice here). StreamingSpec proves old-vs-new
-    * parity on identical input. */
+  /** T2 — UV/first-visit-of-day dedup with 24 h state TTL
+    * (`app/dwm/UniqueVisitApp.java:49-88`): emit only the first event
+    * per (user, UTC day). State: a ListState of seen days per key. The
+    * reference's OnCreateAndWrite TTL (`UniqueVisitApp.java:57-59`)
+    * maps 1:1 onto `TTLConfig(Duration.ofHours(24))` — eviction is
+    * handled by the state store itself. A processing-time TTL keeps the
+    * no-data micro-batch loop alive, so `Trigger.AvailableNow` never
+    * ends on it; tests that drain pass `ttl = None`. */
   def uvDedupTws(ds: Dataset[Ev],
       ttl: Option[java.time.Duration] = Some(java.time.Duration.ofHours(24))): Dataset[Ev] = {
     import ds.sparkSession.implicits._
@@ -364,23 +310,6 @@ object StreamOps {
     * combinator exactly as the reference writes it:
     * begin("start").where(isStart).times(2).consecutive().within(gap),
     * select = first matched start, timeout = the pending start. */
-  def bounceDetect(ds: Dataset[Ev], gapMs: Long = 30L * 60 * 1000): Dataset[Ev] = {
-    import ds.sparkSession.implicits._
-    val pat = CepPattern
-      .begin("start", (e: Ev) => e.event_type == "view")
-      .times(2).consecutive()
-      .within(gapMs)
-    Cep.pattern[Ev](ds, pat,
-      select = m => m("start").head,
-      onTimeout = partial => Some(partial.head))
-  }
-
-  /** [[bounceDetect]] on `transformWithState` — identical pattern and
-    * branches, compiled through [[Cep.patternTws]]. With the T1/T2
-    * ports this moves the LAST stateful operator family (the CEP
-    * combinator, the reference's richest state machine) onto the
-    * forward state API; StreamingSpec proves old-vs-new parity on the
-    * strict/relaxed/timeout/out-of-order branches. */
   def bounceDetectTws(ds: Dataset[Ev], gapMs: Long = 30L * 60 * 1000): Dataset[Ev] = {
     import ds.sparkSession.implicits._
     val pat = CepPattern
@@ -413,8 +342,7 @@ object StreamOps {
     * events arrive and emit (append mode) once the watermark passes
     * the session end, i.e. once no event can extend the session any
     * more. State per live session is one row — the merge is done by
-    * the session-window state store, not a custom
-    * flatMapGroupsWithState. */
+    * the session-window state store, not a custom keyed processor. */
   def sessionStats(ds: Dataset[Ev], gap: String = "30 minutes",
       watermark: String = "2 seconds"): DataFrame =
     ds.withWatermark("ts", watermark)
@@ -840,7 +768,7 @@ object StreamOps {
     routed.select(
       col("sink_table").as("topic"),
       // key = USER, not event: FileTopics guarantees order per key per
-      // partition, and the consumers that care about order (newUserFix,
+      // partition, and the consumers that care about order (newUserFixTws,
       // CEP) are keyed by user — a unique per-event key would make that
       // guarantee vacuous
       col("user_id").cast("string").as("key"),

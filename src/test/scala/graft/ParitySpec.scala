@@ -20,7 +20,7 @@ class ParitySpec extends SparkSuite {
   test("streaming uvDedup equals the batch first-per-day analog on sf0.001") {
     val events = realEvents
     val in = MemoryStream[Ev]
-    val q = StreamOps.uvDedup(in.toDS(), ttlMs = None)
+    val q = StreamOps.uvDedupTws(in.toDS(), ttl = None)
       .writeStream.format("memory").queryName("parity_uv").outputMode("append").start()
     // feed in two chronological batches (state must carry across)
     val (b1, b2) = events.splitAt(events.size / 2)
@@ -101,7 +101,7 @@ class ParitySpec extends SparkSuite {
   test("streaming newUserFix equals the batch row_number analog on sf0.001") {
     val events = realEvents
     val in = MemoryStream[Ev]
-    val q = StreamOps.newUserFix(in.toDS())
+    val q = StreamOps.newUserFixTws(in.toDS())
       .writeStream.format("memory").queryName("parity_nu").outputMode("append").start()
     val (b1, b2) = events.splitAt(events.size / 2)
     in.addData(b1); q.processAllAvailable()
@@ -113,6 +113,34 @@ class ParitySpec extends SparkSuite {
       .select(col("event_id"), col("is_new"))
       .as[(Long, Long)].collect().toMap
     assert(streaming.view.mapValues(_.toLong).toMap === batch)
+  }
+
+  test("streaming bounceDetectTws equals the batch t3_bounce_detect on sf0.001") {
+    import java.sql.Timestamp
+    val events = realEvents
+    val in = MemoryStream[Ev]
+    val q = StreamOps.bounceDetectTws(in.toDS())
+      .writeStream.format("memory").queryName("parity_bounce").outputMode("append").start()
+    val (b1, b2) = events.splitAt(events.size / 2)
+    in.addData(b1); q.processAllAvailable()
+    in.addData(b2); q.processAllAvailable()
+    // release every buffered event and expire every open run: sentinels
+    // far past the data on an unused user, fed twice so the advanced
+    // watermark's timers actually fire
+    val horizon = events.map(_.ts.getTime).max + 2L * 86400 * 1000
+    in.addData(Ev(999999L, 999999L, new Timestamp(horizon), "click", 0.0, 1))
+    q.processAllAvailable()
+    in.addData(Ev(999999L, 999998L, new Timestamp(horizon + 1000), "click", 0.0, 1))
+    q.processAllAvailable()
+    val streaming = spark.table("parity_bounce").as[Ev].collect()
+      .filter(_.user_id != 999999L) // drop sentinels
+      .map(e => (e.user_id, e.event_id)).toSet
+    q.stop()
+    val batch = SparkEntry.queries("t3_bounce_detect")(spark, sf("sf0.001"))
+      .select(col("user_id"), col("event_id"))
+      .as[(Long, Long)].collect().toSet
+    assert(batch.nonEmpty)
+    assert(streaming === batch)
   }
 
   test("statsMerge over chunked real data equals direct batch aggregation") {

@@ -11,6 +11,10 @@ trait SparkSuite extends AnyFunSuite {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.warehouse.dir", "/tmp/graft-warehouse")
     .config("spark.ui.enabled", "false")
+    // every production entry point runs keyed state on RocksDB, and
+    // transformWithState accepts no other provider
+    .config("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     .getOrCreate()
 
   def sf(dir: String): String = s"/root/testdata/$dir"

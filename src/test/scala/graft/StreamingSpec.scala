@@ -153,6 +153,25 @@ class StreamingSpec extends SparkSuite {
   private var n = 0
   private def name(): String = { n += 1; s"stream_out_$n" }
 
+  /** Wait until an AvailableNow query's last progress shows `end`
+    * processed, then stop it. A query with processing-time TTL state
+    * never terminates under AvailableNow (each no-data batch advances
+    * the TTL clock and schedules the next), so awaiting termination
+    * would only run out the clock and leave the query spinning. */
+  private def drainAvailableNow(q: org.apache.spark.sql.streaming.StreamingQuery,
+      end: org.apache.spark.sql.connector.read.streaming.Offset): Unit =
+    try {
+      val deadline = System.currentTimeMillis() + 30000L
+      def processed =
+        Option(q.lastProgress).exists(_.sources.exists(_.endOffset == end.json))
+      while (!processed) {
+        q.exception.foreach(e => throw e)
+        assert(System.currentTimeMillis() < deadline,
+          s"query ${q.name} did not process offset ${end.json} within 30 s")
+        Thread.sleep(50)
+      }
+    } finally q.stop()
+
   // Base all event times at 2024-01-01: an initial watermark of 0
   // (epoch) drops epoch-0 rows as late.
   private val base = 1704067200L
@@ -162,7 +181,7 @@ class StreamingSpec extends SparkSuite {
 
   test("T1 newUserFix keeps is_new only on first event per key, across batches") {
     val in = MemoryStream[Ev]
-    val q = StreamOps.newUserFix(in.toDS())
+    val q = StreamOps.newUserFixTws(in.toDS())
       .writeStream.format("memory").queryName(name()).outputMode("append").start()
     in.addData(ev(1, 1, 0, "view"), ev(1, 2, 10, "click"), ev(2, 3, 5, "view"))
     q.processAllAvailable()
@@ -176,7 +195,7 @@ class StreamingSpec extends SparkSuite {
 
   test("T2 uvDedup emits only first event per (user, day), across batches") {
     val in = MemoryStream[Ev]
-    val q = StreamOps.uvDedup(in.toDS(), ttlMs = None)
+    val q = StreamOps.uvDedupTws(in.toDS(), ttl = None)
       .writeStream.format("memory").queryName(name()).outputMode("append").start()
     val day = 86400L
     in.addData(ev(1, 1, 10, "view"), ev(1, 2, 20, "view"), ev(1, 3, day + 5, "view"))
@@ -190,7 +209,7 @@ class StreamingSpec extends SparkSuite {
 
   test("T3 bounceDetect: consecutive-starts, gap-exceeded and timeout branches") {
     val in = MemoryStream[Ev]
-    val q = StreamOps.bounceDetect(in.toDS(), gapMs = 60000L)
+    val q = StreamOps.bounceDetectTws(in.toDS(), gapMs = 60000L)
       .writeStream.format("memory").queryName(name()).outputMode("append").start()
     in.addData(
       ev(1, 10, 0, "view"), ev(1, 11, 10, "view"), ev(1, 12, 20, "click"),
@@ -213,7 +232,7 @@ class StreamingSpec extends SparkSuite {
   test("CEP combinator: three-stage funnel with matched and timeout branches") {
     import graft.streaming.{Cep, CepPattern}
     val in = MemoryStream[Ev]
-    // a second, different pattern on the same combinator bounceDetect
+    // a second, different pattern on the same combinator bounceDetectTws
     // uses: strict view → click → purchase funnel within 60 s, with
     // abandoned (timeout) runs surfaced on the same output stream
     val pat = CepPattern
@@ -221,7 +240,7 @@ class StreamingSpec extends SparkSuite {
       .next("click", (e: Ev) => e.event_type == "click")
       .next("purchase", (e: Ev) => e.event_type == "purchase")
       .within(60000L)
-    val out = Cep.pattern[(String, Long)](in.toDS(), pat,
+    val out = Cep.patternTws[(String, Long)](in.toDS(), pat,
       select = m => ("funnel", m("view").head.event_id),
       onTimeout = p => Some(("abandoned", p.head.event_id)))
     val q = out.writeStream.format("memory")
@@ -258,7 +277,7 @@ class StreamingSpec extends SparkSuite {
       .begin("view", (e: Ev) => e.event_type == "view")
       .followedBy("purchase", (e: Ev) => e.event_type == "purchase")
       .within(60000L)
-    val out = Cep.pattern[(String, Long, Long)](in.toDS(), pat,
+    val out = Cep.patternTws[(String, Long, Long)](in.toDS(), pat,
       select = m => ("converted", m("view").head.event_id,
         m("purchase").head.event_id),
       onTimeout = p => Some(("lost", p.head.event_id, -1L)))
@@ -292,7 +311,7 @@ class StreamingSpec extends SparkSuite {
       .times(2).consecutive()
       .within(60000L)
     val in = MemoryStream[Ev]
-    val out = Cep.pattern[(String, Long)](in.toDS(), pat,
+    val out = Cep.patternTws[(String, Long)](in.toDS(), pat,
       select = m => ("matched", m("start").head.event_id),
       onTimeout = p => Some(("timeout", p.head.event_id)))
     val q = out.writeStream.format("memory")
@@ -584,9 +603,9 @@ class StreamingSpec extends SparkSuite {
     val dir = java.nio.file.Files.createTempDirectory("ckpt").toString
     Seq(ev(1, 1, 10, "view"), ev(1, 2, 20, "view"))
       .toDF().write.parquet(s"$dir/in/b1")
-    def start() = StreamOps.uvDedup(
+    def start() = StreamOps.uvDedupTws(
       spark.readStream.schema(Seq.empty[Ev].toDF().schema)
-        .parquet(s"$dir/in/*").as[Ev], ttlMs = None)
+        .parquet(s"$dir/in/*").as[Ev], ttl = None)
       .writeStream.format("parquet")
       .option("path", s"$dir/out")
       .option("checkpointLocation", s"$dir/ckpt")
@@ -2241,62 +2260,51 @@ class StreamingSpec extends SparkSuite {
     // micro-batch overwrites its own slot), because a memory-sink
     // table would not survive the restart.
     import graft.streaming.{Cep, CepPattern}
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val nKeys = 2000
-      val in = MemoryStream[Ev]
-      val pat = CepPattern.begin("view", (e: Ev) => e.event_type == "view")
-        .followedByAny("purchase", (e: Ev) => e.event_type == "purchase")
-        .within(30000L)
-      val ckpt = java.nio.file.Files.createTempDirectory("cep-restart-ckpt").toString
-      val byBatch = new java.util.concurrent.ConcurrentHashMap[Long, Seq[(String, Long)]]()
-      def start() = Cep.patternTws[(String, Long)](in.toDS(), pat,
-          m => ("match", m("purchase").head.event_id),
-          p => Some(("timeout", p.head.event_id)), "1 second")
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[(String, Long)], id: Long) =>
-          byBatch.put(id, b.collect().toSeq); ()
-        }
-        .start()
-      var q = start()
-      // batch 1: every key opens a run; k%3==0 buys twice inside within()
-      val views = (0 until nKeys).map(k => ev(k.toLong, k * 10L, k % 7, "view"))
-      val buys = (0 until nKeys).filter(_ % 3 == 0).flatMap(k => Seq(
-        ev(k.toLong, k * 10L + 1, k % 7 + 5, "purchase"),
-        ev(k.toLong, k * 10L + 2, k % 7 + 10, "purchase")))
-      in.addData(views ++ buys: _*); q.processAllAvailable()
-      // RESTART with 2000 open runs and 2000 pending deadline timers
-      q.stop()
-      q = start()
-      // batch 2: watermark past every deadline — the restored timers fire
-      in.addData(ev(999999L, 8888888L, 50, "error")); q.processAllAvailable()
-      // batch 3: k%3==2 purchases arrive after their restored runs expired
-      in.addData((0 until nKeys).filter(_ % 3 == 2).map(k =>
-        ev(k.toLong, k * 10L + 3, 52 + k % 7, "purchase")): _*)
-      q.processAllAvailable()
-      in.addData(ev(999999L, 8888889L, 600, "error")); q.processAllAvailable()
-      q.stop()
-      import scala.jdk.CollectionConverters._
-      val rows = byBatch.values.asScala.toSeq.flatten
-      val matches = rows.filter(_._1 == "match").map(_._2)
-      val timeouts = rows.filter(_._1 == "timeout").map(_._2)
-      val expectMatches = (0 until nKeys).filter(_ % 3 == 0)
-        .flatMap(k => Seq(k * 10L + 1, k * 10L + 2)).toSet
-      val expectTimeouts = (0 until nKeys).map(_ * 10L).toSet
-      assert(matches.size === expectMatches.size && matches.toSet === expectMatches,
-        s"post-restart matches wrong: got ${matches.size}, want ${expectMatches.size}")
-      assert(timeouts.size === expectTimeouts.size && timeouts.toSet === expectTimeouts,
-        s"post-restart timeouts wrong: got ${timeouts.size}, want ${expectTimeouts.size}")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
+    val nKeys = 2000
+    val in = MemoryStream[Ev]
+    val pat = CepPattern.begin("view", (e: Ev) => e.event_type == "view")
+      .followedByAny("purchase", (e: Ev) => e.event_type == "purchase")
+      .within(30000L)
+    val ckpt = java.nio.file.Files.createTempDirectory("cep-restart-ckpt").toString
+    val byBatch = new java.util.concurrent.ConcurrentHashMap[Long, Seq[(String, Long)]]()
+    def start() = Cep.patternTws[(String, Long)](in.toDS(), pat,
+        m => ("match", m("purchase").head.event_id),
+        p => Some(("timeout", p.head.event_id)), "1 second")
+      .writeStream.outputMode("append")
+      .option("checkpointLocation", ckpt)
+      .foreachBatch { (b: org.apache.spark.sql.Dataset[(String, Long)], id: Long) =>
+        byBatch.put(id, b.collect().toSeq); ()
       }
-    }
+      .start()
+    var q = start()
+    // batch 1: every key opens a run; k%3==0 buys twice inside within()
+    val views = (0 until nKeys).map(k => ev(k.toLong, k * 10L, k % 7, "view"))
+    val buys = (0 until nKeys).filter(_ % 3 == 0).flatMap(k => Seq(
+      ev(k.toLong, k * 10L + 1, k % 7 + 5, "purchase"),
+      ev(k.toLong, k * 10L + 2, k % 7 + 10, "purchase")))
+    in.addData(views ++ buys: _*); q.processAllAvailable()
+    // RESTART with 2000 open runs and 2000 pending deadline timers
+    q.stop()
+    q = start()
+    // batch 2: watermark past every deadline — the restored timers fire
+    in.addData(ev(999999L, 8888888L, 50, "error")); q.processAllAvailable()
+    // batch 3: k%3==2 purchases arrive after their restored runs expired
+    in.addData((0 until nKeys).filter(_ % 3 == 2).map(k =>
+      ev(k.toLong, k * 10L + 3, 52 + k % 7, "purchase")): _*)
+    q.processAllAvailable()
+    in.addData(ev(999999L, 8888889L, 600, "error")); q.processAllAvailable()
+    q.stop()
+    import scala.jdk.CollectionConverters._
+    val rows = byBatch.values.asScala.toSeq.flatten
+    val matches = rows.filter(_._1 == "match").map(_._2)
+    val timeouts = rows.filter(_._1 == "timeout").map(_._2)
+    val expectMatches = (0 until nKeys).filter(_ % 3 == 0)
+      .flatMap(k => Seq(k * 10L + 1, k * 10L + 2)).toSet
+    val expectTimeouts = (0 until nKeys).map(_ * 10L).toSet
+    assert(matches.size === expectMatches.size && matches.toSet === expectMatches,
+      s"post-restart matches wrong: got ${matches.size}, want ${expectMatches.size}")
+    assert(timeouts.size === expectTimeouts.size && timeouts.toSet === expectTimeouts,
+      s"post-restart timeouts wrong: got ${timeouts.size}, want ${expectTimeouts.size}")
   }
 
   test("CEP followedByAny soak: 2000 keys on RocksDB — every alternative match and every deadline timeout lands") {
@@ -2309,58 +2317,47 @@ class StreamingSpec extends SparkSuite {
     // key count is the point: one lost timer, one leaked run, or one
     // un-evicted partial shows up as a count mismatch.
     import graft.streaming.{Cep, CepPattern}
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val nKeys = 2000
-      val in = MemoryStream[Ev]
-      val pat = CepPattern.begin("view", (e: Ev) => e.event_type == "view")
-        .followedByAny("purchase", (e: Ev) => e.event_type == "purchase")
-        .within(30000L)
-      val out = Cep.patternTws[(String, Long)](in.toDS(), pat,
-        m => ("match", m("purchase").head.event_id),
-        p => Some(("timeout", p.head.event_id)), "1 second")
-      val q = out.writeStream.format("memory")
-        .queryName(name()).outputMode("append").start()
-      // batch 1: every key opens a run; k%3==0 buys twice inside within()
-      val views = (0 until nKeys).map(k => ev(k.toLong, k * 10L, k % 7, "view"))
-      val buys = (0 until nKeys).filter(_ % 3 == 0).flatMap(k => Seq(
-        ev(k.toLong, k * 10L + 1, k % 7 + 5, "purchase"),
-        ev(k.toLong, k * 10L + 2, k % 7 + 10, "purchase")))
-      in.addData(views ++ buys: _*); q.processAllAvailable()
-      // batch 2: watermark to 49 s — past every deadline (≤ 36 s);
-      // all pending runs expire and their timers fire
-      in.addData(ev(999999L, 8888888L, 50, "error")); q.processAllAvailable()
-      // batch 3: k%3==2 purchases at 52+ s — ABOVE the watermark (so
-      // they are processed, not late-dropped) but their runs are gone
-      in.addData((0 until nKeys).filter(_ % 3 == 2).map(k =>
-        ev(k.toLong, k * 10L + 3, 52 + k % 7, "purchase")): _*)
-      q.processAllAvailable()
-      // batch 4: final watermark push so batch-3 state (if any leaked)
-      // would have to resolve
-      in.addData(ev(999999L, 8888889L, 600, "error")); q.processAllAvailable()
-      val rows = spark.table(s"stream_out_$n").as[(String, Long)].collect().toSeq
-      q.stop()
+    val nKeys = 2000
+    val in = MemoryStream[Ev]
+    val pat = CepPattern.begin("view", (e: Ev) => e.event_type == "view")
+      .followedByAny("purchase", (e: Ev) => e.event_type == "purchase")
+      .within(30000L)
+    val out = Cep.patternTws[(String, Long)](in.toDS(), pat,
+      m => ("match", m("purchase").head.event_id),
+      p => Some(("timeout", p.head.event_id)), "1 second")
+    val q = out.writeStream.format("memory")
+      .queryName(name()).outputMode("append").start()
+    // batch 1: every key opens a run; k%3==0 buys twice inside within()
+    val views = (0 until nKeys).map(k => ev(k.toLong, k * 10L, k % 7, "view"))
+    val buys = (0 until nKeys).filter(_ % 3 == 0).flatMap(k => Seq(
+      ev(k.toLong, k * 10L + 1, k % 7 + 5, "purchase"),
+      ev(k.toLong, k * 10L + 2, k % 7 + 10, "purchase")))
+    in.addData(views ++ buys: _*); q.processAllAvailable()
+    // batch 2: watermark to 49 s — past every deadline (≤ 36 s);
+    // all pending runs expire and their timers fire
+    in.addData(ev(999999L, 8888888L, 50, "error")); q.processAllAvailable()
+    // batch 3: k%3==2 purchases at 52+ s — ABOVE the watermark (so
+    // they are processed, not late-dropped) but their runs are gone
+    in.addData((0 until nKeys).filter(_ % 3 == 2).map(k =>
+      ev(k.toLong, k * 10L + 3, 52 + k % 7, "purchase")): _*)
+    q.processAllAvailable()
+    // batch 4: final watermark push so batch-3 state (if any leaked)
+    // would have to resolve
+    in.addData(ev(999999L, 8888889L, 600, "error")); q.processAllAvailable()
+    val rows = spark.table(s"stream_out_$n").as[(String, Long)].collect().toSeq
+    q.stop()
 
-      val matches = rows.filter(_._1 == "match").map(_._2)
-      val timeouts = rows.filter(_._1 == "timeout").map(_._2)
-      val expectMatches = (0 until nKeys).filter(_ % 3 == 0)
-        .flatMap(k => Seq(k * 10L + 1, k * 10L + 2)).toSet
-      // EVERY view run times out exactly once: the kept-behind source
-      // run of the double-matchers included (followedByAny semantics)
-      val expectTimeouts = (0 until nKeys).map(_ * 10L).toSet
-      assert(matches.size === expectMatches.size && matches.toSet === expectMatches,
-        s"alternative matches wrong: got ${matches.size}, want ${expectMatches.size}")
-      assert(timeouts.size === expectTimeouts.size && timeouts.toSet === expectTimeouts,
-        s"timeouts wrong: got ${timeouts.size}, want ${expectTimeouts.size}")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
+    val matches = rows.filter(_._1 == "match").map(_._2)
+    val timeouts = rows.filter(_._1 == "timeout").map(_._2)
+    val expectMatches = (0 until nKeys).filter(_ % 3 == 0)
+      .flatMap(k => Seq(k * 10L + 1, k * 10L + 2)).toSet
+    // EVERY view run times out exactly once: the kept-behind source
+    // run of the double-matchers included (followedByAny semantics)
+    val expectTimeouts = (0 until nKeys).map(_ * 10L).toSet
+    assert(matches.size === expectMatches.size && matches.toSet === expectMatches,
+      s"alternative matches wrong: got ${matches.size}, want ${expectMatches.size}")
+    assert(timeouts.size === expectTimeouts.size && timeouts.toSet === expectTimeouts,
+      s"timeouts wrong: got ${timeouts.size}, want ${expectTimeouts.size}")
   }
 
   test("partitioned stats: a reader thread racing live merges only ever observes committed states") {
@@ -2697,139 +2694,91 @@ class StreamingSpec extends SparkSuite {
 
   test("keyed state runs on the RocksDB state store provider (the 100 TB state path)") {
     // at 100 TB keyed state outgrows the default HDFS-backed in-memory
-    // provider; prove the operators run unchanged on RocksDB
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
+    // provider; the suite session runs every stateful operator on
+    // RocksDB, so prove the provider is the one in effect and that the
+    // dedup semantics hold on it
+    assert(spark.conf.get("spark.sql.streaming.stateStore.providerClass") ===
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val in = MemoryStream[Ev]
-      val q = StreamOps.uvDedup(in.toDS(), ttlMs = None)
-        .writeStream.format("memory").queryName(name()).outputMode("append").start()
-      in.addData(ev(1, 1, 10, "view"), ev(1, 2, 20, "view"), ev(2, 3, 5, "view"))
-      q.processAllAvailable()
-      in.addData(ev(1, 4, 30, "view"), ev(2, 5, 86400 + 10, "view"))
-      q.processAllAvailable()
-      val ids = spark.table(s"stream_out_$n").as[Ev].collect().map(_.event_id).toSet
-      q.stop()
-      assert(ids === Set(1L, 3L, 5L)) // same dedup semantics on RocksDB
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
+    val in = MemoryStream[Ev]
+    val q = StreamOps.uvDedupTws(in.toDS(), ttl = None)
+      .writeStream.format("memory").queryName(name()).outputMode("append").start()
+    in.addData(ev(1, 1, 10, "view"), ev(1, 2, 20, "view"), ev(2, 3, 5, "view"))
+    q.processAllAvailable()
+    in.addData(ev(1, 4, 30, "view"), ev(2, 5, 86400 + 10, "view"))
+    q.processAllAvailable()
+    val ids = spark.table(s"stream_out_$n").as[Ev].collect().map(_.event_id).toSet
+    q.stop()
+    assert(ids === Set(1L, 3L, 5L)) // same dedup semantics on RocksDB
   }
 
-  test("T2 transformWithState port matches flatMapGroupsWithState on the same stream") {
-    // transformWithState is RocksDB-only by Spark's own check — set the
-    // provider for both queries so old-vs-new runs on identical stores
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val day = 86400L
-      val batch1 = Seq(ev(1, 1, 10, "view"), ev(1, 2, 20, "view"),
-        ev(1, 3, day + 5, "view"), ev(2, 6, 40, "view"))
-      val batch2 = Seq(ev(1, 4, day + 50, "view"), ev(2, 5, day + 30, "view"))
+  test("T1/T2 on transformWithState: one two-batch stream, clockless and 24 h-TTL forms") {
+    val day = 86400L
+    val batch1 = Seq(ev(1, 1, 10, "view"), ev(1, 2, 20, "view"),
+      ev(1, 3, day + 5, "view"), ev(2, 6, 40, "view"))
+    val batch2 = Seq(ev(1, 4, day + 50, "view"), ev(2, 5, day + 30, "view"))
 
-      def run(mk: org.apache.spark.sql.Dataset[Ev] => org.apache.spark.sql.Dataset[Ev]): Set[Long] = {
-        val in = MemoryStream[Ev]
-        val q = mk(in.toDS())
-          .writeStream.format("memory").queryName(name()).outputMode("append").start()
-        in.addData(batch1: _*)
-        q.processAllAvailable()
-        in.addData(batch2: _*)
-        q.processAllAvailable()
-        val ids = spark.table(s"stream_out_$n").as[Ev].collect().map(_.event_id).toSet
-        q.stop()
-        ids
-      }
-
-      val old = run(ds => StreamOps.uvDedup(ds, ttlMs = None))
-      val tws = run(ds => StreamOps.uvDedupTws(ds, ttl = None))
-      assert(old === tws)
-      assert(tws === Set(1L, 3L, 6L, 5L)) // same-day dups 2 and 4 dropped
-
-      // T1 on the same forward path: is_new rewrites must agree with
-      // the flatMapGroupsWithState form across batches
-      def runT1(mk: org.apache.spark.sql.Dataset[Ev] => org.apache.spark.sql.Dataset[Ev]): Map[Long, Int] = {
-        val in = MemoryStream[Ev]
-        val q = mk(in.toDS())
-          .writeStream.format("memory").queryName(name()).outputMode("append").start()
-        in.addData(batch1: _*)
-        q.processAllAvailable()
-        in.addData(batch2: _*)
-        q.processAllAvailable()
-        val m = spark.table(s"stream_out_$n").as[Ev].collect()
-          .map(e => e.event_id -> e.is_new).toMap
-        q.stop()
-        m
-      }
-      val t1Old = runT1(StreamOps.newUserFix)
-      val t1Tws = runT1(StreamOps.newUserFixTws)
-      assert(t1Old === t1Tws)
-      assert(t1Tws === Map(1L -> 1, 2L -> 0, 3L -> 0, 6L -> 1, 4L -> 0, 5L -> 0))
-
-      // the 24 h-TTL production form (TimeMode.ProcessingTime + TTLConfig)
-      // must run on the same topology. ProcessingTime time mode keeps
-      // no-data micro-batches spinning under processAllAvailable (the
-      // operator asks for another batch to advance the TTL clock — same
-      // family as the ProcessingTimeTimeout gotcha), so this variant is
-      // driven by Trigger.AvailableNow: drain everything, then stop.
-      val inTtl = MemoryStream[Ev]
-      inTtl.addData((batch1 ++ batch2): _*)
-      val qTtl = StreamOps.uvDedupTws(inTtl.toDS(),
-          ttl = Some(java.time.Duration.ofHours(24)))
-        .writeStream.format("memory").queryName(name()).outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      qTtl.awaitTermination(120000L)
-      val withTtl = spark.table(s"stream_out_$n").as[Ev].collect().map(_.event_id).toSet
-      assert(withTtl === tws)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    def run(mk: org.apache.spark.sql.Dataset[Ev] => org.apache.spark.sql.Dataset[Ev]): Seq[Ev] = {
+      val in = MemoryStream[Ev]
+      val q = mk(in.toDS())
+        .writeStream.format("memory").queryName(name()).outputMode("append").start()
+      in.addData(batch1: _*)
+      q.processAllAvailable()
+      in.addData(batch2: _*)
+      q.processAllAvailable()
+      val rows = spark.table(s"stream_out_$n").as[Ev].collect().toSeq
+      q.stop()
+      rows
     }
+
+    val tws = run(ds => StreamOps.uvDedupTws(ds, ttl = None)).map(_.event_id).toSet
+    assert(tws === Set(1L, 3L, 6L, 5L)) // same-day dups 2 and 4 dropped
+
+    // T1: is_new rewrites across the same batches
+    val t1Tws = run(StreamOps.newUserFixTws).map(e => e.event_id -> e.is_new).toMap
+    assert(t1Tws === Map(1L -> 1, 2L -> 0, 3L -> 0, 6L -> 1, 4L -> 0, 5L -> 0))
+
+    // the 24 h-TTL production form (TimeMode.ProcessingTime + TTLConfig)
+    // must run on the same topology. ProcessingTime time mode keeps
+    // no-data micro-batches spinning (the operator asks for another
+    // batch to advance the TTL clock), so this variant is driven by
+    // Trigger.AvailableNow until the input is processed, then stopped.
+    val inTtl = MemoryStream[Ev]
+    val end = inTtl.addData((batch1 ++ batch2): _*)
+    val qTtl = StreamOps.uvDedupTws(inTtl.toDS(),
+        ttl = Some(java.time.Duration.ofHours(24)))
+      .writeStream.format("memory").queryName(name()).outputMode("append")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    drainAvailableNow(qTtl, end)
+    val withTtl = spark.table(s"stream_out_$n").as[Ev].collect().map(_.event_id).toSet
+    assert(withTtl === tws)
+    assert(spark.streams.active.isEmpty)
   }
 
   test("substringRepeats with TTL runs on the processing-time clock and matches the clockless form inside the window") {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      // docs 1 and 2 share exactly the 8-token span "a b c d e f g h"
-      // (doc 1 window 1, doc 2 window 3)
-      val d1 = 1L -> "a b c d e f g h i j"
-      val d2 = 2L -> "z z a b c d e f g h"
-      val expected = Set((1L, 1), (2L, 3))
-      // TTL mode needs the processing-time clock, which keeps no-data
-      // micro-batches spinning under processAllAvailable — drive both
-      // forms with AvailableNow (the uvDedupTws TTL precedent)
-      def run(ttl: Option[java.time.Duration]): Set[(Long, Int)] = {
-        val in = MemoryStream[(Long, String)]
-        in.addData(d1, d2)
-        val nm = name()
-        val q = StreamOps.substringRepeats(
-            in.toDF().toDF("doc_id", "text"), ttl = ttl)
-          .writeStream.format("memory").queryName(nm).outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination(120000L)
-        spark.table(nm).as[(Long, Int)].collect().toSet
-      }
-      assert(run(None) === expected)
-      // a 24 h TTL cannot evict inside the test: output identical
-      assert(run(Some(java.time.Duration.ofHours(24))) === expected)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    // docs 1 and 2 share exactly the 8-token span "a b c d e f g h"
+    // (doc 1 window 1, doc 2 window 3)
+    val d1 = 1L -> "a b c d e f g h i j"
+    val d2 = 2L -> "z z a b c d e f g h"
+    val expected = Set((1L, 1), (2L, 3))
+    // TTL mode needs the processing-time clock, which keeps no-data
+    // micro-batches spinning under processAllAvailable — drive both
+    // forms with AvailableNow (the uvDedupTws TTL precedent)
+    def run(ttl: Option[java.time.Duration]): Set[(Long, Int)] = {
+      val in = MemoryStream[(Long, String)]
+      val end = in.addData(d1, d2)
+      val nm = name()
+      val q = StreamOps.substringRepeats(
+          in.toDF().toDF("doc_id", "text"), ttl = ttl)
+        .writeStream.format("memory").queryName(nm).outputMode("append")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      drainAvailableNow(q, end)
+      spark.table(nm).as[(Long, Int)].collect().toSet
     }
+    assert(run(None) === expected)
+    // a 24 h TTL cannot evict inside the test: output identical
+    assert(run(Some(java.time.Duration.ofHours(24))) === expected)
+    assert(spark.streams.active.isEmpty)
   }
 
   test("four-layer topology on file topics: ODS → DWD route → DWS window agg → ADS JDBC") {
@@ -2976,34 +2925,23 @@ class StreamingSpec extends SparkSuite {
   }
 
   test("event-time timers on transformWithState: idle keys emit once, activity re-arms") {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val in = MemoryStream[Ev]
-      val q = StreamOps.idleTimeoutTws(in.toDS(), gapMs = 60000L)
-        .writeStream.format("memory").queryName(name()).outputMode("append").start()
-      // u1 idles after event 11; u2 idles after event 20; u3 re-arms in
-      // batch 2 so its deadline moves to 30s+60s
-      in.addData(ev(1, 10, 0, "view"), ev(1, 11, 10, "click"),
-        ev(2, 20, 5, "view"), ev(3, 30, 0, "view"))
-      q.processAllAvailable()
-      in.addData(ev(3, 31, 30, "click"), ev(9, 90, 600, "view")) // watermark pusher
-      q.processAllAvailable()
-      in.addData(ev(9, 91, 601, "view")) // timers fire the batch after
-      q.processAllAvailable()
-      val fired = spark.table(s"stream_out_$n").as[(Long, Long)].collect().toSet
-      q.stop()
-      // each idle key exactly once, with its NEWEST event id; u9's own
-      // deadline (661s) is beyond the watermark and must not fire
-      assert(fired === Set((1L, 11L), (2L, 20L), (3L, 31L)))
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
+    val in = MemoryStream[Ev]
+    val q = StreamOps.idleTimeoutTws(in.toDS(), gapMs = 60000L)
+      .writeStream.format("memory").queryName(name()).outputMode("append").start()
+    // u1 idles after event 11; u2 idles after event 20; u3 re-arms in
+    // batch 2 so its deadline moves to 30s+60s
+    in.addData(ev(1, 10, 0, "view"), ev(1, 11, 10, "click"),
+      ev(2, 20, 5, "view"), ev(3, 30, 0, "view"))
+    q.processAllAvailable()
+    in.addData(ev(3, 31, 30, "click"), ev(9, 90, 600, "view")) // watermark pusher
+    q.processAllAvailable()
+    in.addData(ev(9, 91, 601, "view")) // timers fire the batch after
+    q.processAllAvailable()
+    val fired = spark.table(s"stream_out_$n").as[(Long, Long)].collect().toSet
+    q.stop()
+    // each idle key exactly once, with its NEWEST event id; u9's own
+    // deadline (661s) is beyond the watermark and must not fire
+    assert(fired === Set((1L, 11L), (2L, 20L), (3L, 31L)))
   }
 
   test("state-schema evolution: evolved processor restarts from a pre-upgrade checkpoint") {
@@ -3013,14 +2951,9 @@ class StreamingSpec extends SparkSuite {
     // checkpoint written with the OLD state element (day only) restarts
     // under the EVOLVED production processor (day + firstEventId), old
     // entries read with the new field defaulted. Requires the Avro
-    // state encoding (the unsaferow default rejects any schema change)
-    // and RocksDB (TWS's own requirement).
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
+    // state encoding (the unsaferow default rejects any schema change).
     val encodingKey = "spark.sql.streaming.stateStore.encodingFormat"
-    val prevProvider = spark.conf.getOption(providerKey)
     val prevEncoding = spark.conf.getOption(encodingKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     spark.conf.set(encodingKey, "avro")
     try {
       val ckpt = java.nio.file.Files.createTempDirectory("uv-evolve-ckpt").toString
@@ -3078,10 +3011,6 @@ class StreamingSpec extends SparkSuite {
         (1L, "2024-01-02", Some(5L))),  // written post-evolution
         s"state entries: $entries")
     } finally {
-      prevProvider match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
       prevEncoding match {
         case Some(v) => spark.conf.set(encodingKey, v)
         case None => spark.conf.unset(encodingKey)
@@ -3167,7 +3096,7 @@ class StreamingSpec extends SparkSuite {
       .begin("start", (e: Ev) => e.event_type == "view")
       .times(2).consecutive()
       .within(10000L)
-    val out = Cep.pattern[(String, Long)](in.toDS(), pat,
+    val out = Cep.patternTws[(String, Long)](in.toDS(), pat,
       select = m => ("match", m("start").head.event_id),
       onTimeout = p => Some(("timeout", p.head.event_id)),
       watermark = "5 seconds")
@@ -3196,213 +3125,163 @@ class StreamingSpec extends SparkSuite {
     assert(rows === Set(("timeout", 11L)))
   }
 
-  test("CEP on transformWithState matches flatMapGroupsWithState on every branch") {
+  test("CEP on transformWithState: every branch, and the bounceDetectTws entry point") {
     import graft.streaming.{Cep, CepPattern}
-    // transformWithState is RocksDB-only by Spark's own check — run
-    // old and new on identical stores so the parity is like-for-like
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      // one harness, two compilations: feed the same batches through
-      // the legacy and the TWS form of the SAME pattern and compare
-      def run(pat: CepPattern, batches: Seq[Seq[Ev]], wmDelay: String = "1 second")(
-          compile: (org.apache.spark.sql.Dataset[Ev], CepPattern,
-            Map[String, Seq[Ev]] => (String, Long),
-            Seq[Ev] => Option[(String, Long)], String) =>
-            org.apache.spark.sql.Dataset[(String, Long)]): Set[(String, Long)] = {
-        val in = MemoryStream[Ev]
-        val out = compile(in.toDS(), pat,
-          // first matched event of the run, independent of stage names
-          m => ("match", m.values.flatten.minBy(e => (e.ts.getTime, e.event_id)).event_id),
-          p => Some(("timeout", p.head.event_id)), wmDelay)
-        val q = out.writeStream.format("memory")
-          .queryName(name()).outputMode("append").start()
-        batches.foreach { b => in.addData(b: _*); q.processAllAvailable() }
-        val rows = spark.table(s"stream_out_$n").as[(String, Long)].collect().toSet
-        q.stop()
-        rows
-      }
-      def parity(pat: CepPattern, batches: Seq[Seq[Ev]],
-          expected: Set[(String, Long)], wmDelay: String = "1 second"): Unit = {
-        val old = run(pat, batches, wmDelay)(Cep.pattern[(String, Long)](_, _, _, _, _))
-        val tws = run(pat, batches, wmDelay)(Cep.patternTws[(String, Long)](_, _, _, _, _))
-        assert(old === tws, s"old=$old tws=$tws")
-        assert(tws === expected)
-      }
-      val wmPush = Seq(Seq(ev(9, 90, 600, "error")), Seq(ev(9, 91, 601, "error")))
-
-      // strict repeats + timeout (the bounceDetect shape): u1 bounces
-      // (and its second run dies on the click), u2's deadline passes
-      // before the late click, u3 never hears again → timer timeout
-      parity(
-        CepPattern.begin("start", (e: Ev) => e.event_type == "view")
-          .times(2).consecutive().within(60000L),
-        Seq(Seq(
-          ev(1, 10, 0, "view"), ev(1, 11, 10, "view"), ev(1, 12, 20, "click"),
-          ev(2, 20, 0, "view"), ev(2, 21, 200, "click"),
-          ev(3, 30, 0, "view"))) ++ wmPush,
-        Set(("match", 10L), ("timeout", 20L), ("timeout", 30L)))
-
-      // strict three-stage funnel: complete, abandoned, and a
-      // strict-contiguity kill with a restart
-      parity(
-        CepPattern.begin("view", (e: Ev) => e.event_type == "view")
-          .next("click", (e: Ev) => e.event_type == "click")
-          .next("purchase", (e: Ev) => e.event_type == "purchase")
-          .within(60000L),
-        Seq(Seq(
-          ev(1, 1, 0, "view"), ev(1, 2, 10, "click"), ev(1, 3, 20, "purchase"),
-          ev(2, 4, 0, "view"), ev(2, 5, 10, "click"),
-          ev(3, 6, 0, "view"), ev(3, 7, 10, "view"),
-          ev(3, 8, 20, "click"), ev(3, 9, 30, "purchase"))) ++ wmPush,
-        Set(("match", 1L), ("match", 7L), ("timeout", 4L)))
-
-      // relaxed followedBy: intervening clicks are skipped, stalls
-      // route to the timeout branch
-      parity(
-        CepPattern.begin("view", (e: Ev) => e.event_type == "view")
-          .followedBy("purchase", (e: Ev) => e.event_type == "purchase")
-          .within(60000L),
-        Seq(Seq(
-          ev(1, 1, 0, "view"), ev(1, 2, 10, "click"),
-          ev(1, 3, 20, "click"), ev(1, 4, 30, "purchase"),
-          ev(2, 5, 0, "view"), ev(2, 6, 10, "click"))) ++ wmPush,
-        Set(("match", 1L), ("timeout", 5L)))
-
-      // out-of-order inside the watermark delay: the later-arriving
-      // EARLIER click must not kill the strict view-run
-      parity(
-        CepPattern.begin("start", (e: Ev) => e.event_type == "view")
-          .times(2).consecutive().within(10000L),
-        Seq(Seq(ev(1, 11, 10, "view")), Seq(ev(1, 10, 9, "click"))) ++ wmPush,
-        Set(("timeout", 11L)), wmDelay = "5 seconds")
-
-      // the bounceDetect entry point itself, old vs new
-      def runBounce(mk: org.apache.spark.sql.Dataset[Ev] => org.apache.spark.sql.Dataset[Ev]): Set[Long] = {
-        val in = MemoryStream[Ev]
-        val q = mk(in.toDS()).writeStream.format("memory")
-          .queryName(name()).outputMode("append").start()
-        (Seq(Seq(
-          ev(1, 10, 0, "view"), ev(1, 11, 10, "view"), ev(1, 12, 20, "click"),
-          ev(2, 20, 0, "view"), ev(2, 21, 200, "click"),
-          ev(3, 30, 0, "view"))) ++ wmPush)
-          .foreach { b => in.addData(b: _*); q.processAllAvailable() }
-        val ids = spark.table(s"stream_out_$n").as[Ev].collect().map(_.event_id).toSet
-        q.stop()
-        ids
-      }
-      val oldBounce = runBounce(StreamOps.bounceDetect(_, gapMs = 60000L))
-      val twsBounce = runBounce(StreamOps.bounceDetectTws(_, gapMs = 60000L))
-      assert(oldBounce === twsBounce)
-      assert(twsBounce === Set(10L, 20L, 30L))
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    // one harness: feed the batches through the pattern and compare
+    // the emitted rows with the expected branch outcomes
+    def check(pat: CepPattern, batches: Seq[Seq[Ev]],
+        expected: Set[(String, Long)], wmDelay: String = "1 second"): Unit = {
+      val in = MemoryStream[Ev]
+      val out = Cep.patternTws[(String, Long)](in.toDS(), pat,
+        // first matched event of the run, independent of stage names
+        m => ("match", m.values.flatten.minBy(e => (e.ts.getTime, e.event_id)).event_id),
+        p => Some(("timeout", p.head.event_id)), wmDelay)
+      val q = out.writeStream.format("memory")
+        .queryName(name()).outputMode("append").start()
+      batches.foreach { b => in.addData(b: _*); q.processAllAvailable() }
+      val rows = spark.table(s"stream_out_$n").as[(String, Long)].collect().toSet
+      q.stop()
+      assert(rows === expected)
     }
+    val wmPush = Seq(Seq(ev(9, 90, 600, "error")), Seq(ev(9, 91, 601, "error")))
+
+    // strict repeats + timeout (the bounceDetectTws shape): u1 bounces
+    // (and its second run dies on the click), u2's deadline passes
+    // before the late click, u3 never hears again → timer timeout
+    check(
+      CepPattern.begin("start", (e: Ev) => e.event_type == "view")
+        .times(2).consecutive().within(60000L),
+      Seq(Seq(
+        ev(1, 10, 0, "view"), ev(1, 11, 10, "view"), ev(1, 12, 20, "click"),
+        ev(2, 20, 0, "view"), ev(2, 21, 200, "click"),
+        ev(3, 30, 0, "view"))) ++ wmPush,
+      Set(("match", 10L), ("timeout", 20L), ("timeout", 30L)))
+
+    // strict three-stage funnel: complete, abandoned, and a
+    // strict-contiguity kill with a restart
+    check(
+      CepPattern.begin("view", (e: Ev) => e.event_type == "view")
+        .next("click", (e: Ev) => e.event_type == "click")
+        .next("purchase", (e: Ev) => e.event_type == "purchase")
+        .within(60000L),
+      Seq(Seq(
+        ev(1, 1, 0, "view"), ev(1, 2, 10, "click"), ev(1, 3, 20, "purchase"),
+        ev(2, 4, 0, "view"), ev(2, 5, 10, "click"),
+        ev(3, 6, 0, "view"), ev(3, 7, 10, "view"),
+        ev(3, 8, 20, "click"), ev(3, 9, 30, "purchase"))) ++ wmPush,
+      Set(("match", 1L), ("match", 7L), ("timeout", 4L)))
+
+    // relaxed followedBy: intervening clicks are skipped, stalls
+    // route to the timeout branch
+    check(
+      CepPattern.begin("view", (e: Ev) => e.event_type == "view")
+        .followedBy("purchase", (e: Ev) => e.event_type == "purchase")
+        .within(60000L),
+      Seq(Seq(
+        ev(1, 1, 0, "view"), ev(1, 2, 10, "click"),
+        ev(1, 3, 20, "click"), ev(1, 4, 30, "purchase"),
+        ev(2, 5, 0, "view"), ev(2, 6, 10, "click"))) ++ wmPush,
+      Set(("match", 1L), ("timeout", 5L)))
+
+    // out-of-order inside the watermark delay: the later-arriving
+    // EARLIER click must not kill the strict view-run
+    check(
+      CepPattern.begin("start", (e: Ev) => e.event_type == "view")
+        .times(2).consecutive().within(10000L),
+      Seq(Seq(ev(1, 11, 10, "view")), Seq(ev(1, 10, 9, "click"))) ++ wmPush,
+      Set(("timeout", 11L)), wmDelay = "5 seconds")
+
+    // the bounceDetectTws entry point itself
+    val in = MemoryStream[Ev]
+    val q = StreamOps.bounceDetectTws(in.toDS(), gapMs = 60000L)
+      .writeStream.format("memory").queryName(name()).outputMode("append").start()
+    (Seq(Seq(
+      ev(1, 10, 0, "view"), ev(1, 11, 10, "view"), ev(1, 12, 20, "click"),
+      ev(2, 20, 0, "view"), ev(2, 21, 200, "click"),
+      ev(3, 30, 0, "view"))) ++ wmPush)
+      .foreach { b => in.addData(b: _*); q.processAllAvailable() }
+    val ids = spark.table(s"stream_out_$n").as[Ev].collect().map(_.event_id).toSet
+    q.stop()
+    assert(ids === Set(10L, 20L, 30L))
   }
 
   test("CEP followedByAny and notNext: Flink surface parity on both engines") {
     import graft.streaming.{Cep, CepPattern}
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      // like the big parity harness, but the select is keyed on the
-      // LAST matched event so followedByAny's alternative matches stay
-      // distinguishable; results compared as Seq multisets, not Sets
-      def run(pat: CepPattern, batches: Seq[Seq[Ev]])(
-          compile: (org.apache.spark.sql.Dataset[Ev], CepPattern,
-            Map[String, Seq[Ev]] => (String, Long),
-            Seq[Ev] => Option[(String, Long)], String) =>
-            org.apache.spark.sql.Dataset[(String, Long)]): Seq[(String, Long)] = {
-        val in = MemoryStream[Ev]
-        val out = compile(in.toDS(), pat,
-          m => ("match", m.values.flatten.maxBy(e => (e.ts.getTime, e.event_id)).event_id),
-          p => Some(("timeout", p.head.event_id)), "1 second")
-        val q = out.writeStream.format("memory")
-          .queryName(name()).outputMode("append").start()
-        batches.foreach { b => in.addData(b: _*); q.processAllAvailable() }
-        val rows = spark.table(s"stream_out_$n").as[(String, Long)].collect().toSeq.sorted
-        q.stop()
-        rows
-      }
-      def parity(pat: CepPattern, batches: Seq[Seq[Ev]],
-          expected: Seq[(String, Long)]): Unit = {
-        val old = run(pat, batches)(Cep.pattern[(String, Long)](_, _, _, _, _))
-        val tws = run(pat, batches)(Cep.patternTws[(String, Long)](_, _, _, _, _))
-        assert(old === tws, s"old=$old tws=$tws")
-        assert(tws === expected.sorted)
-      }
-      val wmPush = Seq(Seq(ev(9, 90, 600, "error")), Seq(ev(9, 91, 601, "error")))
+    // like the branch harness above, but the select is keyed on the
+    // LAST matched event so followedByAny's alternative matches stay
+    // distinguishable; results compared as Seq multisets, not Sets
+    def check(pat: CepPattern, batches: Seq[Seq[Ev]],
+        expected: Seq[(String, Long)]): Unit = {
+      val in = MemoryStream[Ev]
+      val out = Cep.patternTws[(String, Long)](in.toDS(), pat,
+        m => ("match", m.values.flatten.maxBy(e => (e.ts.getTime, e.event_id)).event_id),
+        p => Some(("timeout", p.head.event_id)), "1 second")
+      val q = out.writeStream.format("memory")
+        .queryName(name()).outputMode("append").start()
+      batches.foreach { b => in.addData(b: _*); q.processAllAvailable() }
+      val rows = spark.table(s"stream_out_$n").as[(String, Long)].collect().toSeq.sorted
+      q.stop()
+      assert(rows === expected.sorted)
+    }
+    val wmPush = Seq(Seq(ev(9, 90, 600, "error")), Seq(ev(9, 91, 601, "error")))
 
-      // followedByAny: EVERY purchase inside the window is an
-      // alternative match for the one view (plain followedBy stops at
-      // the first); the kept-behind run and u2's stall both route to
-      // the timeout branch at the deadline
-      parity(
-        CepPattern.begin("view", (e: Ev) => e.event_type == "view")
-          .followedByAny("purchase", (e: Ev) => e.event_type == "purchase")
-          .within(60000L),
-        Seq(Seq(
-          ev(1, 1, 0, "view"), ev(1, 2, 10, "purchase"),
-          ev(1, 3, 20, "click"), ev(1, 4, 30, "purchase"),
-          ev(2, 5, 0, "view"), ev(2, 6, 10, "click"))) ++ wmPush,
-        Seq(("match", 2L), ("match", 4L), ("timeout", 1L), ("timeout", 5L)))
+    // followedByAny: EVERY purchase inside the window is an
+    // alternative match for the one view (plain followedBy stops at
+    // the first); the kept-behind run and u2's stall both route to
+    // the timeout branch at the deadline
+    check(
+      CepPattern.begin("view", (e: Ev) => e.event_type == "view")
+        .followedByAny("purchase", (e: Ev) => e.event_type == "purchase")
+        .within(60000L),
+      Seq(Seq(
+        ev(1, 1, 0, "view"), ev(1, 2, 10, "purchase"),
+        ev(1, 3, 20, "click"), ev(1, 4, 30, "purchase"),
+        ev(2, 5, 0, "view"), ev(2, 6, 10, "click"))) ++ wmPush,
+      Seq(("match", 2L), ("match", 4L), ("timeout", 1L), ("timeout", 5L)))
 
-      // the deterministic control: followedBy consumes the run at the
-      // FIRST purchase — one match, no alternative at id 4
-      parity(
-        CepPattern.begin("view", (e: Ev) => e.event_type == "view")
-          .followedBy("purchase", (e: Ev) => e.event_type == "purchase")
-          .within(60000L),
-        Seq(Seq(
-          ev(1, 1, 0, "view"), ev(1, 2, 10, "purchase"),
-          ev(1, 3, 20, "click"), ev(1, 4, 30, "purchase"))) ++ wmPush,
-        Seq(("match", 2L)))
+    // the deterministic control: followedBy consumes the run at the
+    // FIRST purchase — one match, no alternative at id 4
+    check(
+      CepPattern.begin("view", (e: Ev) => e.event_type == "view")
+        .followedBy("purchase", (e: Ev) => e.event_type == "purchase")
+        .within(60000L),
+      Seq(Seq(
+        ev(1, 1, 0, "view"), ev(1, 2, 10, "purchase"),
+        ev(1, 3, 20, "click"), ev(1, 4, 30, "purchase"))) ++ wmPush,
+      Seq(("match", 2L)))
 
-      // notNext guard between two stages: the event immediately after
-      // the view must not be an error, and that same event must be the
-      // click. u1 matches; u2's error kills the run silently (no
-      // timeout — a failed assertion is a dead run, not a stall); u3's
-      // second view fails the strict click stage but starts its own
-      // run, which times out
-      parity(
-        CepPattern.begin("view", (e: Ev) => e.event_type == "view")
-          .notNext("err", (e: Ev) => e.event_type == "error")
-          .next("click", (e: Ev) => e.event_type == "click")
-          .within(60000L),
-        Seq(Seq(
-          ev(1, 1, 0, "view"), ev(1, 2, 10, "click"),
-          ev(2, 3, 0, "view"), ev(2, 4, 10, "error"), ev(2, 5, 20, "click"),
-          ev(3, 6, 0, "view"), ev(3, 7, 10, "view"))) ++ wmPush,
-        Seq(("match", 2L), ("timeout", 7L)))
+    // notNext guard between two stages: the event immediately after
+    // the view must not be an error, and that same event must be the
+    // click. u1 matches; u2's error kills the run silently (no
+    // timeout — a failed assertion is a dead run, not a stall); u3's
+    // second view fails the strict click stage but starts its own
+    // run, which times out
+    check(
+      CepPattern.begin("view", (e: Ev) => e.event_type == "view")
+        .notNext("err", (e: Ev) => e.event_type == "error")
+        .next("click", (e: Ev) => e.event_type == "click")
+        .within(60000L),
+      Seq(Seq(
+        ev(1, 1, 0, "view"), ev(1, 2, 10, "click"),
+        ev(2, 3, 0, "view"), ev(2, 4, 10, "error"), ev(2, 5, 20, "click"),
+        ev(3, 6, 0, "view"), ev(3, 7, 10, "view"))) ++ wmPush,
+      Seq(("match", 2L), ("timeout", 7L)))
 
-      // structural guards: the assertion must anchor to a strict stage
-      def compileOf(pat: CepPattern): Unit = {
-        val in0 = MemoryStream[Ev]
-        Cep.pattern[(String, Long)](in0.toDS(), pat,
-          m => ("x", 0L), _ => None, "1 second")
-        ()
-      }
-      intercept[IllegalArgumentException] {
-        compileOf(CepPattern.begin("a", (_: Ev) => true)
-          .notNext("b", (_: Ev) => true).within(1000L))
-      }
-      intercept[IllegalArgumentException] {
-        compileOf(CepPattern.begin("a", (_: Ev) => true)
-          .notNext("b", (_: Ev) => true)
-          .followedBy("c", (_: Ev) => true).within(1000L))
-      }
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
+    // structural guards: the assertion must anchor to a strict stage
+    def compileOf(pat: CepPattern): Unit = {
+      val in0 = MemoryStream[Ev]
+      Cep.patternTws[(String, Long)](in0.toDS(), pat,
+        m => ("x", 0L), _ => None, "1 second")
+      ()
+    }
+    intercept[IllegalArgumentException] {
+      compileOf(CepPattern.begin("a", (_: Ev) => true)
+        .notNext("b", (_: Ev) => true).within(1000L))
+    }
+    intercept[IllegalArgumentException] {
+      compileOf(CepPattern.begin("a", (_: Ev) => true)
+        .notNext("b", (_: Ev) => true)
+        .followedBy("c", (_: Ev) => true).within(1000L))
     }
   }
 
@@ -3415,14 +3294,9 @@ class StreamingSpec extends SparkSuite {
     // written with the v0 run element (events only) restarts under the
     // EVOLVED CepProcessor — old runs still advance to matches, their
     // state rows read with `admittedAtWm` defaulted to null. Same
-    // requirements as the T2 evolution proof: Avro state encoding +
-    // RocksDB (TWS's own requirement).
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
+    // requirement as the T2 evolution proof: Avro state encoding.
     val encodingKey = "spark.sql.streaming.stateStore.encodingFormat"
-    val prevProvider = spark.conf.getOption(providerKey)
     val prevEncoding = spark.conf.getOption(encodingKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     spark.conf.set(encodingKey, "avro")
     try {
       val ckpt = java.nio.file.Files.createTempDirectory("cep-evolve-ckpt").toString
@@ -3496,10 +3370,6 @@ class StreamingSpec extends SparkSuite {
         (3L, 1, 7L, false)), // written by v0 → defaulted to null
         s"state entries: $entries")
     } finally {
-      prevProvider match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
       prevEncoding match {
         case Some(v) => spark.conf.set(encodingKey, v)
         case None => spark.conf.unset(encodingKey)
@@ -3694,76 +3564,64 @@ class StreamingSpec extends SparkSuite {
 
   test("streaming ExactSubstr: accumulated rep-window events equal the batch rwin on the shared corpus; each event emits once; crash replay rewrites identically") {
     import graft.ops.Dedup
-    // transformWithState is RocksDB-only by Spark's own check
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val corpus = spark.read
-        .parquet(s"${sf("sf0.001")}/documents.parquet")
-        .select("doc_id", "text").as[(Long, String)].collect().sortBy(_._1)
-      // the batch truth over the SAME corpus, via the SHARED window
-      // relation (Dedup.substringWindows underlies both legs — the
-      // parity claim is about the stateful protocol, not re-agreeing
-      // on tokenization)
-      val expected = Dedup.substringRepWindows(
-          corpus.toSeq.toDF("doc_id", "text"))
-        .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
-      assert(expected.size > 1000,
-        s"premise: sf0.001 must carry cross-doc repeated spans (${expected.size})")
+    val corpus = spark.read
+      .parquet(s"${sf("sf0.001")}/documents.parquet")
+      .select("doc_id", "text").as[(Long, String)].collect().sortBy(_._1)
+    // the batch truth over the SAME corpus, via the SHARED window
+    // relation (Dedup.substringWindows underlies both legs — the
+    // parity claim is about the stateful protocol, not re-agreeing
+    // on tokenization)
+    val expected = Dedup.substringRepWindows(
+        corpus.toSeq.toDF("doc_id", "text"))
+      .collect().map(r => (r.getLong(0), r.getInt(1))).toSet
+    assert(expected.size > 1000,
+      s"premise: sf0.001 must carry cross-doc repeated spans (${expected.size})")
 
-      val outDir = java.nio.file.Files.createTempDirectory("substr-out").toString
-      val ckpt = java.nio.file.Files.createTempDirectory("substr-ckpt").toString
-      val in = MemoryStream[(Long, String)]
-      def startQ() = StreamOps.substringIngest(
-          in.toDF().toDF("doc_id", "text"), outDir)
-        .option("checkpointLocation", ckpt).start()
-      // three micro-batches: cross-BATCH repeats dominate (a doc's
-      // twin usually lands in another third), so the retro-emission
-      // path (pending flushed when the second doc arrives later) is
-      // load-bearing, not incidental
-      val thirds = corpus.grouped((corpus.length + 2) / 3).toSeq
-      val q = startQ()
-      thirds.foreach { t => in.addData(t.toSeq: _*); q.processAllAvailable() }
-      q.stop()
+    val outDir = java.nio.file.Files.createTempDirectory("substr-out").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("substr-ckpt").toString
+    val in = MemoryStream[(Long, String)]
+    def startQ() = StreamOps.substringIngest(
+        in.toDF().toDF("doc_id", "text"), outDir)
+      .option("checkpointLocation", ckpt).start()
+    // three micro-batches: cross-BATCH repeats dominate (a doc's
+    // twin usually lands in another third), so the retro-emission
+    // path (pending flushed when the second doc arrives later) is
+    // load-bearing, not incidental
+    val thirds = corpus.grouped((corpus.length + 2) / 3).toSeq
+    val q = startQ()
+    thirds.foreach { t => in.addData(t.toSeq: _*); q.processAllAvailable() }
+    q.stop()
 
-      val evSchema = org.apache.spark.sql.types.StructType.fromDDL(
-        "doc_id BIGINT, i INT")
-      def events(b: Int): Seq[(Long, Int)] =
-        spark.read.schema(evSchema).parquet(s"$outDir/b$b")
-          .collect().map(r => (r.getLong(0), r.getInt(1))).toSeq
-      val perBatch = thirds.indices.map(events)
-      // batch parity: the union of emitted events IS the batch rwin
-      assert(perBatch.flatten.toSet === expected)
-      // ...and each event emitted exactly once (the pending-then-flip
-      // protocol never double-reports an occurrence)
-      assert(perBatch.map(_.size).sum === expected.size,
-        "an occurrence was emitted more than once across batches")
+    val evSchema = org.apache.spark.sql.types.StructType.fromDDL(
+      "doc_id BIGINT, i INT")
+    def events(b: Int): Seq[(Long, Int)] =
+      spark.read.schema(evSchema).parquet(s"$outDir/b$b")
+        .collect().map(r => (r.getLong(0), r.getInt(1))).toSeq
+    val perBatch = thirds.indices.map(events)
+    // batch parity: the union of emitted events IS the batch rwin
+    assert(perBatch.flatten.toSet === expected)
+    // ...and each event emitted exactly once (the pending-then-flip
+    // protocol never double-reports an occurrence)
+    assert(perBatch.map(_.size).sum === expected.size,
+      "an occurrence was emitted more than once across batches")
 
-      // crash replay: drop the LAST batch's commit marker and restart
-      // from the same checkpoint + source — the engine re-runs that
-      // batch against the rolled-back state-store version and must
-      // overwrite b<last> with the identical event set
-      val lastB = thirds.length - 1
-      val lastBefore = perBatch(lastB).toSet
-      java.nio.file.Files.delete(
-        java.nio.file.Paths.get(s"$ckpt/commits/$lastB"))
-      // the local-FS checkpoint manager writes a checksum sidecar per
-      // commit file; a stale one blocks the replay's rewrite
-      java.nio.file.Files.deleteIfExists(
-        java.nio.file.Paths.get(s"$ckpt/commits/.$lastB.crc"))
-      val q2 = startQ()
-      q2.processAllAvailable()
-      q2.stop()
-      assert(events(lastB).toSet === lastBefore,
-        "replayed batch rewrote a different event set")
-      assert(thirds.indices.flatMap(events).toSet === expected)
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
+    // crash replay: drop the LAST batch's commit marker and restart
+    // from the same checkpoint + source — the engine re-runs that
+    // batch against the rolled-back state-store version and must
+    // overwrite b<last> with the identical event set
+    val lastB = thirds.length - 1
+    val lastBefore = perBatch(lastB).toSet
+    java.nio.file.Files.delete(
+      java.nio.file.Paths.get(s"$ckpt/commits/$lastB"))
+    // the local-FS checkpoint manager writes a checksum sidecar per
+    // commit file; a stale one blocks the replay's rewrite
+    java.nio.file.Files.deleteIfExists(
+      java.nio.file.Paths.get(s"$ckpt/commits/.$lastB.crc"))
+    val q2 = startQ()
+    q2.processAllAvailable()
+    q2.stop()
+    assert(events(lastB).toSet === lastBefore,
+      "replayed batch rewrote a different event set")
+    assert(thirds.indices.flatMap(events).toSet === expected)
   }
 }
