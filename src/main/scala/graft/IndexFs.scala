@@ -53,27 +53,30 @@ object IndexFs {
     * micro-batch. Probed-cell counts are micro-batch/probe-bounded
     * (never corpus-proportional — the O(1)-metadata contract
     * IndexFsSpec pins), so driver listing is O(100) stat calls.
-    * Parameterised per the round rules: `spark.graft.index
-    * .listingJobThreshold` (session conf) overrides the raised
-    * default — an object-store deployment whose LIST latency makes
-    * distributed listing win at lower path counts can set it back
-    * down without a code change. Scoped set/restore is safe here
-    * because the file index is built EAGERLY inside
-    * `DataFrameReader.parquet(paths)`; worst case under concurrent
-    * streams is one read using the other's threshold — either way a
-    * correct listing, at most one extra listing job. */
-  def withCellListing[A](spark: SparkSession)(body: => A): A = {
-    val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-    val raised = spark.conf.getOption("spark.graft.index.listingJobThreshold")
-      .getOrElse("1024")
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, raised)
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+    * The set/body/restore runs under one lock: two probes on one
+    * session that interleaved unlocked could leave the raised value
+    * set for good (the second captures the first's raised value as
+    * its "previous" and restores it after the first unset it), so
+    * later corpus-scale reads would list on the driver. The body is
+    * one eagerly built file index (`DataFrameReader.parquet(paths)`),
+    * so the lock is held for one probe-bounded listing. */
+  def withCellListing[A](spark: SparkSession)(body: => A): A =
+    cellListingLock.synchronized {
+      val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+      // explicitly set values only: getOption answers the default for
+      // an unset key, and restoring that would leave the key set
+      val prev = spark.conf.getAll.get(key)
+      spark.conf.set(key, cellListingJobThreshold.toString)
+      try body
+      finally prev match {
+        case Some(v) => spark.conf.set(key, v)
+        case None => spark.conf.unset(key)
+      }
     }
-  }
+
+  /** Path count above which a cell read lists through a Spark job. */
+  private val cellListingJobThreshold = 1024
+  private val cellListingLock = new Object
 
   def isDir(spark: SparkSession, path: String): Boolean = {
     tick()

@@ -479,13 +479,9 @@ object ServeSoak {
       // enough that the veto, not luck, is what prevents a flip-flop
       val hotFloor = math.max(1L,
         IndexMaintenance.lshSignals(spark, lshDir).hottestCellRows / 2)
-      // calibratePasses rides the composed soak too: the FIRST fold on
-      // this (uncalibrated) root must self-measure the two-stage floor
-      // with live ingest + serving contending, and later folds must
-      // carry it without re-paying (the one-measurement-per-root rule)
       val lshPolicy = IndexMaintenance.Policy(backlogRatio = 0.02,
         backlogBatches = 3, hotCellRows = hotFloor, coldCellRows = 8,
-        maxDeltaFiles = 24, calibratePasses = 1)
+        maxDeltaFiles = 24)
       val ivfPolicy = IndexMaintenance.Policy(backlogRatio = 0.02,
         backlogBatches = 3, driftBound = 0.05, lloydIters = 1,
         trainPqIters = 1)
@@ -582,11 +578,6 @@ object ServeSoak {
       require(acts.exists(_.contains("Compact")) ||
         acts.exists(_.contains("Lloyd")),
         s"no fold ever fired under 10 ingest batches: $acts")
-      // the autopilot-triggered self calibration fired on the first
-      // LSH fold and persisted a measured floor for this root
-      require(Dedup.calibratedFloorOf(spark, lshDir).isDefined,
-        "no calibrated floor after a composed-soak fold on an " +
-          "uncalibrated root (Policy.calibratePasses arc)")
       // decision log intact: one row per unique incoming doc, every
       // batch — "unique" by the ingest operator's own exact-fingerprint
       // contract (the corpus contains genuine dup-text pairs, so two

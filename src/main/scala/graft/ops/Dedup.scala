@@ -395,7 +395,8 @@ object Dedup {
     * inside the generation directory (written with the data like
     * `_prefix_len`, retired with the directory by GC, invisible to
     * Spark's file index): line 1 is the hottest cell's row count (the
-    * layout-level signal), the rest the FAT-CELL TAIL —
+    * layout-level signal) plus a `truncated` tag when the tail was
+    * capped, the rest the FAT-CELL TAIL —
     * `cellName\trows` for cells ≥ [[cellMassTailFloor]], heaviest
     * first, capped — the per-probe two-stage decision input. Base
     * cell mass only changes at a fold, so the writer pays one
@@ -405,8 +406,7 @@ object Dedup {
     * re-aggregating footers; rows appended BETWEEN folds reach the
     * decision through the ledger's per-cell row counts, not this
     * file. */
-  private def writeGenCellMass(spark: SparkSession, root: String,
-      calibFloor: Option[Long] = None): Unit = {
+  private def writeGenCellMass(spark: SparkSession, root: String): Unit = {
     val cells = spark.read.schema(bandReadSchema).option("basePath", root)
       .parquet(root)
       .groupBy("band_id", "sig_p").agg(count(lit(1)).as("n"))
@@ -430,21 +430,20 @@ object Dedup {
     val truncated = tailRows.length > cellMassTailCap
     val tail = tailRows.take(cellMassTailCap)
       .map(r => s"band_id=${r.getInt(0)}/sig_p=${r.getString(1)}\t${r.getLong(2)}")
-    // line-1 tags (content-keyed, order-free): `truncated` marks a
-    // capped tail; `floor=N` is the CALIBRATED two-stage floor
-    // ([[calibrateTwoStageFloor]]) — a storage property, so folds
-    // carry it into each new generation's summary
-    val head = (hottest.toString +:
-      (if (truncated) Seq("truncated") else Nil)) ++
-      calibFloor.map(f => s"floor=$f").toSeq
+    // line-1 tags are content-keyed and order-free: `truncated` marks
+    // a capped tail; readers ignore any other tag
+    val head = hottest.toString +:
+      (if (truncated) Seq("truncated") else Nil)
     graft.GenLifecycle.writeMeta(spark, root, "_cell_mass",
       (head.mkString("\t") +: tail).mkString("\n"))
   }
 
-  /** `(hottest, fat-cell tail, tail-truncated, calibrated floor)` of a
-    * generation — None on a pre-mass layout. One metadata read. */
+  /** `(hottest, fat-cell tail, tail-truncated)` of a generation —
+    * None on a pre-mass layout. One metadata read. Unknown line-1 tags
+    * are ignored (older layouts may carry a `floor=N` tag, which no
+    * reader honours). */
   private def readGenCellMassFull(spark: SparkSession,
-      root: String): Option[(Long, Map[String, Long], Boolean, Option[Long])] =
+      root: String): Option[(Long, Map[String, Long], Boolean)] =
     graft.GenLifecycle.readMeta(spark, root, "_cell_mass").map { raw =>
       val lines = raw.split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
       val headFields = lines.head.split("\t")
@@ -452,205 +451,29 @@ object Dedup {
         val Array(cell, n) = l.split("\t")
         cell -> n.toLong
       }.toMap
-      (headFields(0).toLong, tail,
-        headFields.drop(1).contains("truncated"),
-        headFields.drop(1).collectFirst {
-          case f if f.startsWith("floor=") => f.drop(6).toLong
-        })
+      (headFields(0).toLong, tail, headFields.drop(1).contains("truncated"))
     }
 
   private def readGenCellMass(spark: SparkSession, root: String): Option[Long] =
     readGenCellMassFull(spark, root).map(_._1)
 
-  /** Default fat-cell floor for [[twoStageAuto]]: the measured
-    * crossover (PERF.md) has the two-stage probe at parity-to-slower
-    * on ~4k-row cells and winning 1.7× at ~60k-row cells; 16384 sits
-    * above the measured parity zone and below the proven win, i.e.
-    * the flip only fires once cells are unambiguously many-page.
-    * This constant is the local[32]/NVMe measurement — a deployment
-    * on different storage (object-store latency, other page sizes)
-    * has a different parity zone, which is what
-    * [[calibrateTwoStageFloor]] measures and persists per layout;
-    * a persisted floor wins over this fallback. */
+  /** Fat-cell floor of the two-stage AUTO decision ([[twoStageAuto]],
+    * [[nearDupCheckWithProbe]] with `twoStage = None`): the measured
+    * crossover (PERF.md, ServeSoak on local[32]/NVMe) has the two-stage
+    * probe at parity-to-slower on ~4k-row cells and winning 1.7× at
+    * ~60k-row cells; 16384 sits above the measured parity zone and
+    * below the proven win, i.e. the flip only fires once cells are
+    * unambiguously many-page. Storage with a different parity zone
+    * would need its own measurement; none is taken at run time. */
   val twoStageCellRowsFloor: Long = 16384L
-
-  /** Rewrite the live generation's calibrated-floor tag, preserving
-    * the summary's hottest/tail/truncated content (atomic — the tag
-    * rides the same `_cell_mass` line every probe already reads, so
-    * honoring it costs ZERO extra metadata I/O). */
-  private[graft] def writeCalibratedFloor(spark: SparkSession,
-      indexDir: String, floor: Long): Unit = {
-    val st = graft.GenLifecycle.resolveOrThrow(spark, indexDir,
-      "LSH", "persistLshIndex")
-    val root = lshBase(indexDir, st.gen)
-    val raw = graft.GenLifecycle.readMeta(spark, root, "_cell_mass")
-      .getOrElse(throw new IllegalStateException(
-        s"no _cell_mass under $root — pre-mass layouts cannot calibrate"))
-    val lines = raw.split("\n").toSeq.filter(_.trim.nonEmpty)
-    val head = lines.head.split("\t").toSeq
-      .filterNot(_.startsWith("floor=")) :+ s"floor=$floor"
-    graft.GenLifecycle.writeMeta(spark, root, "_cell_mass",
-      (head.mkString("\t") +: lines.drop(1)).mkString("\n"))
-  }
-
-  /** CALIBRATE the two-stage floor on THIS deployment's storage: run
-    * `sampleDocs` as a probe in BOTH forms (forced one-pass, forced
-    * two-stage), interleaved `passes` times (min-of-passes — the
-    * bench-noise discipline), and persist a floor derived from the
-    * observed outcome at the probe's measured cell mass `M` (the
-    * heaviest probed base cell):
-    *
-    *   - two-stage WINS (≥5% faster): the crossover is at or below
-    *     `M` here → floor := min(M, current default) — layouts this
-    *     fat serve two-stage from now on;
-    *   - two-stage LOSES: the crossover is above `M` → floor :=
-    *     max(M + 1, fallback) — the measured statement is exactly
-    *     "not at M", so everything at or below M stays one-pass.
-    *
-    * The floor persists as a `floor=N` tag on the live generation's
-    * `_cell_mass` line 1 (carried across folds — a storage property),
-    * and every AUTO probe honors it with zero extra metadata reads.
-    * Calibrate with a sample that lands in the layout's fat cells
-    * (e.g. near-copies of hot-family docs). `M` is the base summary's
-    * probed-cell mass PLUS the ledger-recorded committed-delta mass
-    * (the same base+delta input the AUTO decision uses), so an
-    * append-heavy un-folded backlog no longer underestimates it; and
-    * a sample that intersects NO fat cell (M below
-    * [[cellMassTailFloor]]) REFUSES to persist — a two-stage "win" at
-    * page-sized cells is container noise, and persisting its floor=1
-    * would pin every future AUTO probe on this layout to the
-    * two-stage plan (carried across folds). Re-run after a storage
-    * migration. Returns the persisted floor. The default 16384
-    * remains honest for uncalibrated layouts (the local measurement,
-    * see [[twoStageCellRowsFloor]]). */
-  def calibrateTwoStageFloor(spark: SparkSession, indexDir: String,
-      sampleDocs: DataFrame, passes: Int = 3): Long =
-    calibrateTwoStageFloorRows(spark, indexDir,
-      len => bandRows(sampleDocs, len, exactFallback = false), passes)
-
-  /** [[calibrateTwoStageFloor]] over a probe BAND-ROW builder instead
-    * of raw docs — the form the self-aimed calibration feeds (its
-    * sample is band rows lifted from the index itself, there is no
-    * text to band). */
-  private[graft] def calibrateTwoStageFloorRows(spark: SparkSession,
-      indexDir: String, probeBandsAt: Int => DataFrame,
-      passes: Int = 3): Long = {
-    val st = graft.GenLifecycle.resolveOrThrow(spark, indexDir,
-      "LSH", "persistLshIndex")
-    val baseRoot = lshBase(indexDir, st.gen)
-    val effPrefix = readLshPrefixLen(spark, indexDir).getOrElse(2)
-    val baseLen = readGenPrefixLen(spark, baseRoot).getOrElse(effPrefix)
-    val (_, tail, _, _) = readGenCellMassFull(spark, baseRoot)
-      .getOrElse(throw new IllegalStateException(
-        s"no _cell_mass under $baseRoot — pre-mass layouts cannot calibrate"))
-    val liveData = lshDeltaEntries(spark, indexDir)
-      .filter(e => !e.tomb && e.id > st.floor)
-    val probedCells = probeBandsAt(effPrefix)
-      .select(col("band_id"), substring(col("sig"), 1, baseLen).as("p"))
-      .distinct().collect()
-      .map(r => (r.getInt(0), r.getString(1)))
-    val m = probedCells.map { case (b, p) =>
-      tail.getOrElse(s"band_id=$b/sig_p=$p", 0L) + deltaMassFor(liveData, b, p)
-    }.maxOption.getOrElse(0L)
-    // degenerate-sample guard: below the tail floor the two-stage form
-    // cannot genuinely win (the measured parity zone starts well above
-    // one parquet page), so any observed "win" is noise — and
-    // persisting min(m, …) would pin floor≈1 onto this layout forever.
-    // Refusing (instead of silently returning the default) makes a
-    // mis-aimed calibration sample cost one loud error, not a
-    // persisted perf regression.
-    require(m >= cellMassTailFloor,
-      s"calibration sample probed no fat cell (max probed base+delta " +
-        s"cell mass $m < $cellMassTailFloor): a floor measured on " +
-        "page-sized cells would be noise — aim the sample at the " +
-        "layout's fat cells (_cell_mass tail) or keep the default " +
-        s"$twoStageCellRowsFloor")
-    def timedRun(form: Boolean): Double = {
-      val t0 = System.nanoTime()
-      // releasable form: 2×passes probe pins must not accumulate
-      val (out, _, release) = nearDupCheckWithProbeRows(spark, indexDir,
-        probeBandsAt, jaccardThreshold, Long.MaxValue, effPrefix,
-        broadcastProbe = true, twoStage = Some(form))
-      out.count()
-      release()
-      (System.nanoTime() - t0) / 1e9
-    }
-    // interleaved min-of-passes: container drift taxes one sample,
-    // never the comparison
-    val samples = (1 to math.max(1, passes)).map(_ => (timedRun(false), timedRun(true)))
-    val onePass = samples.map(_._1).min
-    val twoStage = samples.map(_._2).min
-    val floor =
-      if (twoStage < onePass * 0.95) math.min(math.max(m, 1L), twoStageCellRowsFloor)
-      else math.max(m + 1, twoStageCellRowsFloor)
-    writeCalibratedFloor(spark, indexDir, floor)
-    floor
-  }
-
-  /** The persisted calibrated two-stage floor of the live generation,
-    * if one was ever measured (`floor=N` on `_cell_mass` line 1 —
-    * fold-carried, a storage property). None on an uncalibrated or
-    * pre-mass layout. */
-  private[graft] def calibratedFloorOf(spark: SparkSession,
-      indexDir: String): Option[Long] =
-    graft.GenManifest.resolve(spark, indexDir).flatMap(st =>
-      readGenCellMassFull(spark, lshBase(indexDir, st.gen)).flatMap(_._4))
-
-  /** SELF-AIMED calibration sample: probe band rows lifted from the
-    * live base generation's HEAVIEST fat cell — `nDocs` stored rows
-    * re-identified outside the corpus id space (each is a perfect
-    * signature match of its source doc, so the probe exercises the
-    * candidate join and exact verify exactly where the two-stage
-    * split has bytes to save). Collected to the driver (≤ nDocs tiny
-    * rows — one cell read once, not re-read per timed pass) and
-    * re-parallelized. None when the layout records no fat cell: a
-    * floor measured on page-sized cells would be container noise
-    * (the [[calibrateTwoStageFloor]] refusal, answered as absence
-    * here because the autopilot must not die on thin layouts). */
-  private[graft] def selfCalibrationBandRows(spark: SparkSession,
-      indexDir: String, nDocs: Int = 5): Option[DataFrame] =
-    graft.GenManifest.resolve(spark, indexDir).flatMap { st =>
-      val baseRoot = lshBase(indexDir, st.gen)
-      readGenCellMassFull(spark, baseRoot).flatMap { case (_, tail, _, _) =>
-        if (tail.isEmpty) None
-        else {
-          val hotCell = tail.maxBy { case (c, n) => (n, c) }._1
-          // one doc per (band, sig) in a cell, so limit(nDocs) IS
-          // nDocs distinct docs; lowest ids for determinism
-          val sampled = spark.read.schema(bandReadSchema)
-            .option("basePath", baseRoot).parquet(s"$baseRoot/$hotCell")
-            .orderBy("doc_id").limit(nDocs).collect()
-          if (sampled.isEmpty) None
-          else Some(spark.createDataFrame(
-            spark.sparkContext.parallelize(sampled.toSeq.map(r =>
-              org.apache.spark.sql.Row(r.getLong(0) + (1L << 42),
-                r.getString(1), r.getSeq[String](2), r.getInt(3),
-                r.getString(4))), 1),
-            bandReadSchema))
-        }
-      }
-    }
-
-  /** [[calibrateTwoStageFloor]] with the sample aimed automatically
-    * ([[selfCalibrationBandRows]]) — the zero-operator form the
-    * maintenance autopilot runs after a fold on an uncalibrated
-    * layout ([[IndexMaintenance.Policy.calibratePasses]]). Returns
-    * the persisted floor, or None (nothing persisted) when the layout
-    * has no fat cell to measure on — thin layouts keep the honest
-    * default instead of a noise-pinned floor. */
-  def calibrateTwoStageFloorSelf(spark: SparkSession, indexDir: String,
-      passes: Int = 2, nDocs: Int = 5): Option[Long] =
-    selfCalibrationBandRows(spark, indexDir, nDocs).map(probe =>
-      calibrateTwoStageFloorRows(spark, indexDir, _ => probe, passes))
 
   /** Committed-delta row mass attributable to cell `(b, p)` from the
     * ledger entries' per-cell row counts — zero extra reads (the
     * counts rode each append's ledger entry). A delta cell recorded at
     * a DIFFERENT prefix length counts when prefix-compatible —
     * conservative over-attribution on the transient mixed-length
-    * layouts a rebucket leaves. Shared by the per-probe two-stage AUTO
-    * decision and [[calibrateTwoStageFloor]], so both see the same
-    * base+delta mass. */
+    * layouts a rebucket leaves. Input of the per-probe two-stage AUTO
+    * decision. */
   private def deltaMassFor(liveDataEntries: Seq[graft.GenManifest.DeltaEntry],
       b: Int, p: String): Long =
     liveDataEntries.iterator.map { e =>
@@ -676,7 +499,9 @@ object Dedup {
     * serves one-pass probes into its page-sized cells. One manifest
     * resolve + one metadata line — O(1) in corpus, backlog and probe
     * size. A pre-mass layout (no `_cell_mass`) answers false: the
-    * one-pass plan is the safe default. */
+    * one-pass plan is the safe default. `floor` defaults to the
+    * measured constant [[twoStageCellRowsFloor]]; no floor is read
+    * from the index. */
   def twoStageAuto(spark: SparkSession, indexDir: String,
       floor: Long = twoStageCellRowsFloor): Boolean =
     graft.GenManifest.resolve(spark, indexDir).exists { st =>
@@ -1123,13 +948,17 @@ object Dedup {
     * micro-batch-sized probes (the ingest/serving path, same bounded
     * collect discipline as IVF serving); a corpus-scale probe would
     * make the survivor collect data-plane-sized — keep the default
-    * one-pass plan there. */
-  /** `twoStage = None` is AUTO: resolved per call FROM THE PROBED
+    * one-pass plan there.
+    *
+    * `twoStage = None` is AUTO: resolved per call FROM THE PROBED
     * CELLS — the base generation's persisted fat-cell tail
     * (`_cell_mass`) intersected with the cells THIS probe lands in;
     * two-stage only when a probed base cell carries at least
-    * `twoStageFloor` rows. The layout's hottest cell alone is NOT the
-    * signal: a skewed layout can read "fat" while every probe lands
+    * `twoStageFloor` rows (default: the measured constant
+    * [[twoStageCellRowsFloor]]; nothing persisted in the index
+    * overrides it — a `floor=N` tag an older layout carries is
+    * ignored). The layout's hottest cell alone is NOT the signal: a
+    * skewed layout can read "fat" while every probe lands
     * in page-sized cells, where the second scan is pure overhead
     * (measured — ServeSoak ×100 lsh_serve 0.72 s vs lsh_2stage
     * 0.78 s on a layout whose hottest clique cell cleared the floor).
@@ -1168,11 +997,10 @@ object Dedup {
       indexDir: String, probeElems: DataFrame, threshold: Double,
       belowBatch: Long = Long.MaxValue, prefixLen: Int = 2,
       broadcastProbe: Boolean = true,
-      twoStage: Option[Boolean] = Some(false),
-      twoStageFloor: Long = twoStageCellRowsFloor): (DataFrame, DataFrame, () => Unit) =
+      twoStage: Option[Boolean] = Some(false)): (DataFrame, DataFrame, () => Unit) =
     nearDupCheckWithProbeRows(spark, indexDir,
       len => bandRowsOfElems(probeElems, len), threshold, belowBatch,
-      prefixLen, broadcastProbe, twoStage, twoStageFloor)
+      prefixLen, broadcastProbe, twoStage)
 
   private def nearDupCheckWithProbeRows(spark: SparkSession,
       indexDir: String, probeBandsAt: Int => DataFrame, threshold: Double,
@@ -1235,19 +1063,13 @@ object Dedup {
     // O(fat-cells) file read. Explicit Some(x) skips it.
     val twoStageEff = twoStage.getOrElse(
       readGenCellMassFull(spark, baseRoot).exists {
-        case (hottest, tail, truncated, calib) =>
-          // a CALIBRATED floor ([[calibrateTwoStageFloor]] — measured
-          // on this deployment's own storage) wins over the caller's
-          // constant, the prefixLen precedent: decision knobs live in
-          // index metadata; the parameter is the pre-calibration
-          // fallback
-          val floor = calib.getOrElse(twoStageFloor)
-          if (floor < cellMassTailFloor) hottest >= floor
+        case (hottest, tail, truncated) =>
+          if (twoStageFloor < cellMassTailFloor) hottest >= twoStageFloor
           else {
             val probed = prefixesAt(baseLen)
             probed.exists { case (b, p) =>
               tail.getOrElse(s"band_id=$b/sig_p=$p", 0L) +
-                deltaMassFor(liveDataEntries, b, p) >= floor
+                deltaMassFor(liveDataEntries, b, p) >= twoStageFloor
             } ||
               // truncated tail: a probed cell ABSENT from it is unknown
               // (could be fat, cut off by the cap), not known-thin —
@@ -1256,7 +1078,7 @@ object Dedup {
               // many-fat-cells layouts truncation happens on
               (truncated && probed.exists { case (b, p) =>
                 !tail.contains(s"band_id=$b/sig_p=$p")
-              } && hottest >= floor)
+              } && hottest >= twoStageFloor)
           }
       })
     lastTwoStageDecisions.put(indexDir, twoStageEff)
@@ -1457,11 +1279,7 @@ object Dedup {
       writeBandCells(relabeled, newBase, maxCellRows)
       graft.GenLifecycle.writeMeta(spark, newBase, "_prefix_len",
         targetLen.toString)
-      // the calibrated two-stage floor is a STORAGE property — carry
-      // it from the superseded generation's summary into the new one
-      writeGenCellMass(spark, newBase,
-        calibFloor = readGenCellMassFull(spark, lshBase(indexDir, st.gen))
-          .flatMap(_._4))
+      writeGenCellMass(spark, newBase)
       graft.GenLifecycle.writeGenId(spark, newBase)
       // a tombstone RETIRES (floor-covers) only once folded DATA
       // reaches its id: retiring t<N> while a data batch with id <= N

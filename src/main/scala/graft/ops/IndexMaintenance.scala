@@ -108,18 +108,21 @@ object IndexMaintenance {
     * `backlogBatches`: fold on sheer delta-directory count even when
     * the rows are few (per-root listing overhead). `driftBound`:
     * squared-L2 centroid mean-shift above which label geometry is
-    * stale enough to re-cluster. */
-  /** `trainPqIters`: when a drift repair re-clusters anyway (the one
+    * stale enough to re-cluster.
+    *
+    * `trainPqIters`: when a drift repair re-clusters anyway (the one
     * moment the PQ codebook's label space moves), also Lloyd-refine
     * the per-subspace sub-codebooks on the folded corpus
     * ([[Similarity.trainPqCodebookRows]]); 0 (default) keeps the
-    * training-free projection codebook. */
-  /** `hotCellRows`: base-cell row mass above which the LSH layout is
+    * training-free projection codebook.
+    *
+    * `hotCellRows`: base-cell row mass above which the LSH layout is
     * re-bucketed one prefix char finer (0 = disabled — the right
     * default for bounded corpora; size it to the per-probe read budget
     * on growing ones). A rebucket IS a fold, so it subsumes any
-    * pending Compact. */
-  /** `coldCellRows`: MEDIAN base-cell row mass below which the LSH
+    * pending Compact.
+    *
+    * `coldCellRows`: MEDIAN base-cell row mass below which the LSH
     * layout is re-bucketed one prefix char COARSER (0 = disabled) —
     * the downward twin of `hotCellRows` for a corpus that SHRANK: the
     * escalation-only policy would strand a 16×-over-split layout of
@@ -127,12 +130,14 @@ object IndexMaintenance {
     * exists to fix, and per-probe listing overhead forever). Bounded
     * at prefix length 1, and VETOED when folding would recreate a hot
     * cell (`Signals.foldedHottestRows` vs `hotCellRows`), so the two
-    * signals can never flip-flop. */
-  /** `maxDeltaFiles`: live delta cell-directory count at or above
+    * signals can never flip-flop.
+    *
+    * `maxDeltaFiles`: live delta cell-directory count at or above
     * which a fold is justified on FS-metadata pressure alone (0 =
     * disabled — size it to the probe-latency budget per delta file on
-    * the deployment's store; see [[Signals.deltaFiles]]). */
-  /** `maxTombRows`: live tombstone key mass at or above which a fold
+    * the deployment's store; see [[Signals.deltaFiles]]).
+    *
+    * `maxTombRows`: live tombstone key mass at or above which a fold
     * is justified on probe-side anti-join tax alone (0 = disabled —
     * size it to the broadcast budget per probe; see
     * [[Signals.tombRows]]). NOTE a tombstone only RETIRES once folded
@@ -140,8 +145,9 @@ object IndexMaintenance {
     * stream this trigger self-clears at the first fold after the next
     * data batch; with NO data flowing the fold still applies the
     * delete physically and the signal persists harmlessly until one
-    * arrives. */
-  /** `hotCellMass` (IVF only): MEAN post-fold cell mass
+    * arrives.
+    *
+    * `hotCellMass` (IVF only): MEAN post-fold cell mass
     * (`(baseRows + deltaRows) / cellCount`) at or above which the
     * layout re-clusters into a larger coarse quantizer, k re-sized
     * toward √N (0 = disabled — the right default for bounded corpora;
@@ -151,16 +157,11 @@ object IndexMaintenance {
     * subsumes any pending Compact/LloydRebuild this tick, and the
     * signal self-clears once the new k holds the mean under the bound
     * (√N > current k is also required — a corpus that already sits at
-    * the classic sizing won't churn). */
-  /** `calibratePasses` (LSH only): > 0 runs the SELF-AIMED two-stage
-    * floor calibration ([[Dedup.calibrateTwoStageFloorSelf]], this
-    * many interleaved passes) after an executed fold — Compact or
-    * Rebucket — on a layout with NO persisted floor yet. The floor is
-    * a storage property (fold-carried), so one measurement per
-    * storage root suffices and a calibrated layout never re-pays the
-    * probe timing; a layout with no fat cell to measure on is left
-    * uncalibrated (the honest default keeps serving). 0 = disabled —
-    * the manual [[Dedup.calibrateTwoStageFloor]] call stands. */
+    * the classic sizing won't churn).
+    *
+    * No field tunes the LSH two-stage probe: its floor is the
+    * measured constant [[Dedup.twoStageCellRowsFloor]], and a fold
+    * only refreshes the decision's input (`_cell_mass`). */
   final case class Policy(
       backlogRatio: Double = 0.10,
       backlogBatches: Int = 8,
@@ -171,8 +172,7 @@ object IndexMaintenance {
       coldCellRows: Long = 0L,
       hotCellMass: Long = 0L,
       maxDeltaFiles: Long = 0L,
-      maxTombRows: Long = 0L,
-      calibratePasses: Int = 0)
+      maxTombRows: Long = 0L)
 
   private def decide(s: Signals, p: Policy): Action =
     if (s.maxDrift.exists(_ > p.driftBound)) LloydRebuild(p.lloydIters)
@@ -404,16 +404,6 @@ object IndexMaintenance {
       case NoOp => ()
       case Rebucket(len) => Dedup.rebucketLshIndex(spark, indexDir, len)
       case _ => Dedup.compactLshIndex(spark, indexDir)
-    }
-    // deployment-measured two-stage floor, once per storage root: the
-    // fold just rewrote the base (fresh _cell_mass), so an uncalibrated
-    // layout calibrates here — after, never during, the fold — and a
-    // calibrated one (floor is fold-carried) never re-pays the timing
-    if (action != NoOp && policy.calibratePasses > 0 &&
-        Dedup.calibratedFloorOf(spark, indexDir).isEmpty) {
-      Dedup.calibrateTwoStageFloorSelf(spark, indexDir,
-        passes = policy.calibratePasses)
-      ()
     }
     action
   }

@@ -94,16 +94,16 @@ object JdbcBatchSink {
     *
     *   - **whole-batch replay** (crash after sink write, before the
     *     streaming checkpoint commit): a driver-side transaction
-    *     `DELETE FROM t WHERE _batch_id = ?` clears EVERY row of the
+    *     `DELETE FROM t WHERE graft_batch_id = ?` clears EVERY row of the
     *     prior attempt — keyed on batchId alone because the replay may
     *     repartition differently than the first attempt;
     *   - **task retry within one attempt**: each partition's
-    *     transaction opens with `DELETE ... WHERE _batch_id = ? AND
-    *     _part_id = ?` before its inserts, so a re-executed task lands
+    *     transaction opens with `DELETE ... WHERE graft_batch_id = ?
+    *     AND graft_part_id = ?` before its inserts, so a re-executed task lands
     *     its rows once even when other partitions already committed.
     *
-    * Rows carry two ledger columns (`_batch_id BIGINT`,
-    * `_part_id INT`) appended after the data columns; a torn attempt
+    * Rows carry two ledger columns (`graft_batch_id BIGINT`,
+    * `graft_part_id INT`) appended after the data columns; a torn attempt
     * (crash mid-transaction) rolls back and leaves nothing. This is
     * the `ExactlyOnceSink`/`statsMerge` commit discipline re-expressed
     * for a JDBC target that supports transactions — the delete leg is
@@ -165,7 +165,7 @@ object JdbcBatchSink {
   }
 
   /** Side-ledger variant of [[writeBatchExactlyOnce]]: the DATA table
-    * keeps the clean bean schema — no `_batch_id`/`_part_id` columns,
+    * keeps the clean bean schema — no `graft_batch_id`/`graft_part_id` columns,
     * matching the reference's wide-stats tables, which carry no
     * bookkeeping (`utils/ClickHouseUtil.java:20-54`) — and the replay
     * bookkeeping lives in two companions:
@@ -179,7 +179,7 @@ object JdbcBatchSink {
     *     commit record.
     *
     * Promotion is one driver-side transaction of three server-side
-    * statements (`INSERT INTO t SELECT … FROM stage WHERE _batch_id=?`;
+    * statements (`INSERT INTO t SELECT … FROM stage WHERE graft_batch_id=?`;
     * ledger insert; stage clear) — no row ever moves through the
     * driver, so promote cost is the store's own bulk-copy, not a
     * second network write of the batch.
@@ -265,8 +265,10 @@ object JdbcBatchSink {
         writeBatchExactlyOnce(batch, table, connFactory, batchId, batchSize, transientCols)
     }
 
-  val BatchIdCol = "_batch_id"
-  val PartIdCol = "_part_id"
+  /** Ledger column names: plain identifiers every SQL dialect accepts
+    * unquoted (Derby, for one, rejects a leading underscore). */
+  val BatchIdCol = "graft_batch_id"
+  val PartIdCol = "graft_part_id"
 
   /** begin(setAutoCommit(false)) → body → commit, rollback on any
     * failure, connection always closed. */

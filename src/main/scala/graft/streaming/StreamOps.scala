@@ -1140,25 +1140,23 @@ object StreamOps {
     * one row per unique incoming doc — `(doc_id, dup_of, jac)` with
     * `dup_of`/`jac` null for accepted docs, else the best-matching
     * index doc (highest Jaccard, ties to the lowest id) or the
-    * in-batch family survivor. */
-  /** `twoStageProbe`: None (default) AUTO-selects the probe form once
-    * per micro-batch from the index's persisted fat-cell tail PLUS the
+    * in-batch family survivor.
+    *
+    * The probe form (one-pass or two-stage) is AUTO-selected once per
+    * micro-batch from the index's persisted fat-cell tail PLUS the
     * ledger-recorded committed-delta mass, intersected with the
-    * batch's OWN probed cells (resolved inside
+    * batch's OWN probed cells, against the measured constant
+    * [[graft.ops.Dedup.twoStageCellRowsFloor]] (resolved inside
     * [[graft.ops.Dedup.nearDupCheckWithProbe]] — O(1) metadata I/O,
     * re-read each batch so a mid-stream re-bucket OR an append-heavy
-    * backlog flips the plan with the layout); Some(x) is the operator
-    * override, forcing the form either way. Decisions are identical in all three modes by the
-    * two-stage probe's lossless construction — the knob is purely a
-    * read-plan choice. */
+    * backlog flips the plan with the layout). Decisions do not depend
+    * on the form, by the two-stage probe's lossless construction — it
+    * is purely a read-plan choice, so the writer exposes no knob. */
   def dedupIngest(docs: DataFrame, indexDir: String, outDir: String,
-      threshold: Double = 0.4,
-      twoStageProbe: Option[Boolean] = None,
-      twoStageFloor: Long = graft.ops.Dedup.twoStageCellRowsFloor): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+      threshold: Double = 0.4): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     docs.writeStream.outputMode("append").foreachBatch {
       (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        dedupIngestBatch(batch.toDF(), indexDir, outDir, batchId, threshold,
-          twoStageProbe, twoStageFloor)
+        dedupIngestBatch(batch.toDF(), indexDir, outDir, batchId, threshold)
     }
 
   private[graft] def dedupIngestBatch(batch: DataFrame, indexDir: String,
@@ -1219,11 +1217,11 @@ object StreamOps {
       // when the cells THIS probe lands in are fat (many parquet pages
       // each — the 100 TB regime); at page-sized cells the second scan
       // costs more than the shingle-column pruning saves (ServeSoak
-      // lsh_hot vs lsh_serve, PERF.md crossover). The default AUTO
-      // mode (None) resolves that inside the probe itself — the
-      // index's persisted fat-cell tail intersected with the batch's
-      // own cells, re-read each batch so a mid-stream re-bucket moves
-      // the plan WITH the layout; Some(x) stays the operator override.
+      // lsh_hot vs lsh_serve, PERF.md crossover). The AUTO mode
+      // resolves that inside the probe itself — the index's persisted
+      // fat-cell tail intersected with the batch's own cells, re-read
+      // each batch so a mid-stream re-bucket moves the plan WITH the
+      // layout.
       val (dupsRaw, probeRows, releaseProbe) = probe(uniq)
       val dups = dupsRaw.persist()
       try {
@@ -1378,22 +1376,16 @@ object StreamOps {
     * tombstone, delta and decision-log writes are all batchId-keyed
     * overwrites (StreamingSpec pins replay-identical decisions). */
   def dedupIngestCdc(changes: DataFrame, indexDir: String, outDir: String,
-      threshold: Double = 0.4,
-      twoStageProbe: Option[Boolean] = None,
-      twoStageFloor: Long = graft.ops.Dedup.twoStageCellRowsFloor): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+      threshold: Double = 0.4): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     changes.writeStream.outputMode("append").foreachBatch {
       (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        dedupIngestCdcBatch(batch.toDF(), indexDir, outDir, batchId,
-          threshold, twoStageProbe, twoStageFloor)
+        dedupIngestCdcBatch(batch.toDF(), indexDir, outDir, batchId, threshold)
     }
 
   private[graft] def dedupIngestCdcBatch(batch: DataFrame, indexDir: String,
-      outDir: String, batchId: Long, threshold: Double,
-      twoStageProbe: Option[Boolean] = None,
-      twoStageFloor: Long = graft.ops.Dedup.twoStageCellRowsFloor): Unit =
+      outDir: String, batchId: Long, threshold: Double): Unit =
     lshIngestCdcBatch(batch, indexDir, batchId)(adds =>
-      dedupIngestBatch(adds, indexDir, outDir, batchId, threshold,
-        twoStageProbe, twoStageFloor))
+      dedupIngestBatch(adds, indexDir, outDir, batchId, threshold))
 
   /** The modality-agnostic CDC-envelope skeleton both LSH ingest
     * families share: delete ops tombstone FIRST at the batch's own id
@@ -1451,19 +1443,14 @@ object StreamOps {
     * fallback: a payload whose body is under 8 bytes has no gram to
     * match on (the modality's analog of a zero-token doc). */
   def mmDedupIngest(media: DataFrame, indexDir: String, outDir: String,
-      threshold: Double = 0.5,
-      twoStageProbe: Option[Boolean] = None,
-      twoStageFloor: Long = graft.ops.Dedup.twoStageCellRowsFloor): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+      threshold: Double = 0.5): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     media.writeStream.outputMode("append").foreachBatch {
       (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        mmDedupIngestBatch(batch.toDF(), indexDir, outDir, batchId,
-          threshold, twoStageProbe, twoStageFloor)
+        mmDedupIngestBatch(batch.toDF(), indexDir, outDir, batchId, threshold)
     }
 
   private[graft] def mmDedupIngestBatch(batch: DataFrame, indexDir: String,
       outDir: String, batchId: Long, threshold: Double,
-      twoStageProbe: Option[Boolean] = None,
-      twoStageFloor: Long = graft.ops.Dedup.twoStageCellRowsFloor,
       pairsDriverCap: Long = graft.ops.Dedup.inBatchPairsDriverCap): Unit =
     dedupIngestBatchCore(batch, indexDir, outDir, batchId,
       md5(col("payload")),
@@ -1471,7 +1458,7 @@ object StreamOps {
         batch.sparkSession, indexDir,
         graft.ops.Multimodal.payloadGrams(uniq), threshold,
         belowBatch = batchId, prefixLen = 2, broadcastProbe = true,
-        twoStage = twoStageProbe, twoStageFloor = twoStageFloor),
+        twoStage = None),
       threshold, pairsDriverCap)
 
   /** [[dedupIngestCdc]] for the binary-media modality — one change
@@ -1484,22 +1471,16 @@ object StreamOps {
     * text and media families now carry the identical enforced
     * stream-driven takedown arc. */
   def mmDedupIngestCdc(changes: DataFrame, indexDir: String, outDir: String,
-      threshold: Double = 0.5,
-      twoStageProbe: Option[Boolean] = None,
-      twoStageFloor: Long = graft.ops.Dedup.twoStageCellRowsFloor): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+      threshold: Double = 0.5): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     changes.writeStream.outputMode("append").foreachBatch {
       (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        mmDedupIngestCdcBatch(batch.toDF(), indexDir, outDir, batchId,
-          threshold, twoStageProbe, twoStageFloor)
+        mmDedupIngestCdcBatch(batch.toDF(), indexDir, outDir, batchId, threshold)
     }
 
   private[graft] def mmDedupIngestCdcBatch(batch: DataFrame, indexDir: String,
-      outDir: String, batchId: Long, threshold: Double,
-      twoStageProbe: Option[Boolean] = None,
-      twoStageFloor: Long = graft.ops.Dedup.twoStageCellRowsFloor): Unit =
+      outDir: String, batchId: Long, threshold: Double): Unit =
     lshIngestCdcBatch(batch, indexDir, batchId)(adds =>
-      mmDedupIngestBatch(adds, indexDir, outDir, batchId, threshold,
-        twoStageProbe, twoStageFloor))
+      mmDedupIngestBatch(adds, indexDir, outDir, batchId, threshold))
 
   /** Union of batch-result directories under an explicit schema —
     * NEVER inferred: a batch whose result was empty (all probed cells

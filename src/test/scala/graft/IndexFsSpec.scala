@@ -199,4 +199,39 @@ class IndexFsSpec extends SparkSuite {
     assert(GenLifecycle.versionIds(spark, dir, "v", gated = false).sorted ===
       Seq(1L, 10L), "GC kept the wrong set")
   }
+
+  test("withCellListing: two interleaved probes on one session leave the listing threshold unset") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    spark.conf.unset(key)
+    val default = spark.conf.get(key)
+    val aInBody, bInBody, aDone = new CountDownLatch(1)
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    def thread(body: => Unit): Thread = new Thread(() =>
+      try body catch { case t: Throwable => errors.add(t); () })
+    // the interleaving that leaks the raised value without a lock: B
+    // enters while A is inside, A restores first (unset), B restores
+    // last (the raised value it saw as "previous"). Every wait is
+    // bounded, so under the lock (B blocked until A leaves) A's wait
+    // times out and the two bodies run in turn instead of deadlocking.
+    val a = thread {
+      IndexFs.withCellListing(spark) {
+        aInBody.countDown(); bInBody.await(2, TimeUnit.SECONDS)
+      }
+      aDone.countDown()
+    }
+    val b = thread {
+      assert(aInBody.await(30, TimeUnit.SECONDS), "A never entered its body")
+      IndexFs.withCellListing(spark) {
+        bInBody.countDown(); aDone.await(30, TimeUnit.SECONDS)
+      }
+    }
+    a.start(); b.start()
+    a.join(60000L); b.join(60000L)
+    assert(!a.isAlive && !b.isAlive, "a probe thread is still running")
+    assert(errors.isEmpty, errors)
+    assert(spark.conf.get(key) === default,
+      "the raised listing threshold leaked into the session")
+    assert(!spark.conf.getAll.contains(key), "the threshold is left set after both probes")
+  }
 }

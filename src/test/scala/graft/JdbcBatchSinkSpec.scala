@@ -253,7 +253,7 @@ class JdbcBatchSinkSpec extends SparkSuite {
   // ---- exactly-once form (batchId-keyed transactional commit) ----
 
   private def dataRows(bid: Long): Seq[(Any, Any)] =
-    MockJdbcDb.rows.filter(r => String.valueOf(r("_batch_id")) == bid.toString)
+    MockJdbcDb.rows.filter(r => String.valueOf(r(JdbcBatchSink.BatchIdCol)) == bid.toString)
       .map(r => (r("id"), r("v"))).sortBy(t => String.valueOf(t._1))
 
   test("exactly-once: rows land once with ledger columns and txn boundaries") {
@@ -263,7 +263,8 @@ class JdbcBatchSinkSpec extends SparkSuite {
       batchId = 7L, batchSize = 2)
     val rs = MockJdbcDb.rows
     assert(rs.size === 4)
-    assert(rs.forall(r => String.valueOf(r("_batch_id")) == "7" && r.contains("_part_id")))
+    assert(rs.forall(r => String.valueOf(r(JdbcBatchSink.BatchIdCol)) == "7" &&
+      r.contains(JdbcBatchSink.PartIdCol)))
     // one driver txn (whole-batch delete) + one per partition, all committed
     val e = MockJdbcDb.entries
     assert(e.count(_ == "begin") === 3)
@@ -395,7 +396,54 @@ class JdbcBatchSinkSpec extends SparkSuite {
     q.processAllAvailable()
     q.stop()
     assert(MockJdbcDb.rows.size === 3)
-    val bids = MockJdbcDb.rows.map(r => String.valueOf(r("_batch_id"))).toSet
+    val bids = MockJdbcDb.rows.map(r => String.valueOf(r(JdbcBatchSink.BatchIdCol))).toSet
     assert(bids === Set("0", "1"))
+  }
+
+  test("exactly-once forms on embedded Derby: a replayed batch and a ledgered batch land every row once") {
+    // a real SQL dialect instead of the mock: Derby parses the ledger
+    // columns, the transactions and the INSERT..SELECT promote itself
+    val url = "jdbc:derby:memory:graft_sink_spec;create=true"
+    val mk = () => java.sql.DriverManager.getConnection(url)
+    def exec(sql: String): Unit = {
+      val c = mk()
+      try { val st = c.createStatement(); try st.execute(sql) finally st.close() }
+      finally c.close()
+    }
+    def rows(sql: String): Seq[List[String]] = {
+      val c = mk()
+      try {
+        val rs = c.createStatement().executeQuery(sql)
+        val n = rs.getMetaData.getColumnCount
+        try Iterator.continually(rs).takeWhile(_.next())
+          .map(r => (1 to n).map(r.getString).toList).toVector
+        finally rs.close()
+      } finally c.close()
+    }
+    val ledgerCols = s"${JdbcBatchSink.BatchIdCol} BIGINT, ${JdbcBatchSink.PartIdCol} INT"
+    try {
+      exec(s"CREATE TABLE dws_t (id BIGINT, v VARCHAR(8), $ledgerCols)")
+      exec("CREATE TABLE dws_l (id BIGINT, v VARCHAR(8))")
+      exec(s"CREATE TABLE dws_l_stage (id BIGINT, v VARCHAR(8), $ledgerCols)")
+      exec("CREATE TABLE dws_l_ledger (batch_id BIGINT)")
+      val input = Seq((1L, "a"), (2L, "b"), (3L, "c"), (4L, "d"))
+      val expected = input.map { case (id, v) => List(id.toString, v) }
+      val df = input.toDF("id", "v").repartition(2)
+      JdbcBatchSink.writeBatchExactlyOnce(df, "dws_t", mk, batchId = 7L, batchSize = 2)
+      // replay of the same batchId with a different partitioning
+      JdbcBatchSink.writeBatchExactlyOnce(df.coalesce(1), "dws_t", mk, batchId = 7L,
+        batchSize = 2)
+      assert(rows("SELECT id, v FROM dws_t ORDER BY id") === expected)
+      assert(rows(s"SELECT COUNT(*) FROM dws_t WHERE ${JdbcBatchSink.BatchIdCol} = 7") ===
+        Seq(List("4")))
+      JdbcBatchSink.writeBatchExactlyOnceLedgered(df, "dws_l", mk, batchId = 3L, batchSize = 2)
+      assert(rows("SELECT id, v FROM dws_l ORDER BY id") === expected)
+      assert(rows("SELECT COUNT(*) FROM dws_l_stage") === Seq(List("0")))
+      assert(rows("SELECT batch_id FROM dws_l_ledger") === Seq(List("3")))
+    } finally {
+      // dropping an in-memory database reports success as SQLState 08006
+      try java.sql.DriverManager.getConnection("jdbc:derby:memory:graft_sink_spec;drop=true")
+      catch { case _: java.sql.SQLException => () }
+    }
   }
 }

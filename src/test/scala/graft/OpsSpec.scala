@@ -1473,6 +1473,14 @@ class OpsSpec extends SparkSuite {
       "probe into the fat clique cell did not select two-stage")
     assert(!probeDecision(textA),
       "probe into page-sized cells selected two-stage off the layout's skew")
+    // a legacy `floor=1` tag on _cell_mass line 1 (older layouts carry
+    // it) is ignored: the same probe stays one-pass on the caller's floor
+    val liveRoot = s"$fatDir/bands_g${GenManifest.resolve(spark, fatDir).get.gen}"
+    val massLines = graft.GenLifecycle.readMeta(spark, liveRoot, "_cell_mass").get
+      .split("\n").toSeq
+    graft.GenLifecycle.writeMeta(spark, liveRoot, "_cell_mass",
+      (s"${massLines.head}\tfloor=1" +: massLines.tail).mkString("\n"))
+    assert(!probeDecision(textA), "a legacy floor= tag drove the AUTO decision")
   }
 
   test("an empty committed delta neither wedges compaction nor corrupts stats") {
@@ -1999,146 +2007,6 @@ class OpsSpec extends SparkSuite {
         assert(probed() === visible, s"seed=$seed step=$step after replay")
       }
     }
-  }
-
-  test("calibrated two-stage floor: persisted per layout, wins over the constant, survives folds") {
-    import graft.ops.Dedup
-    val indexDir = java.nio.file.Files.createTempDirectory("lsh-calib").toString
-    val seeded = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"
-    Dedup.persistLshIndex(
-      (0 until 1200).map(i => (i.toLong, seeded)).toDF("doc_id", "text"),
-      indexDir)
-    val probe = Seq(990001L -> seeded).toDF("doc_id", "text")
-    def decision(): Boolean = {
-      // the DEFAULT constant rides the call — a persisted floor must
-      // be what flips it, exactly the prefixLen persisted-beats-param
-      // discipline
-      val (out, _, release) = Dedup.nearDupCheckWithProbe(spark, indexDir,
-        probe, threshold = 0.4, belowBatch = Long.MaxValue, prefixLen = 2,
-        broadcastProbe = true, exactFallback = false, twoStage = None)
-      out.collect()
-      release()
-      Dedup.lastTwoStageDecision(indexDir).get
-    }
-    // uncalibrated: the clique cells (1200 rows) sit far below the
-    // local default (16384) — one-pass
-    assert(!decision(), "premise broken: default floor already flips")
-
-    // the REAL calibration brackets the crossover at the probe's
-    // measured mass M=1200: win → floor = M; lose → floor = max(M+1,
-    // default). Either way the persisted value is honest for this
-    // container — the mechanism assertions below force both sides.
-    val floor = Dedup.calibrateTwoStageFloor(spark, indexDir, probe, passes = 2)
-    assert(floor == 1200L || floor == Dedup.twoStageCellRowsFloor,
-      s"calibrated floor $floor brackets nothing measurable")
-
-    // persisted floor below the probed mass → AUTO flips with the
-    // caller still passing the default constant
-    Dedup.writeCalibratedFloor(spark, indexDir, 1100L)
-    assert(decision(), "persisted calibrated floor not honored")
-    Dedup.writeCalibratedFloor(spark, indexDir, 1300L)
-    assert(!decision(), "a floor above the probed mass still flipped")
-
-    // a fold carries the tag into the new generation's summary
-    Dedup.writeCalibratedFloor(spark, indexDir, 1100L)
-    Dedup.appendToLshIndex(spark, indexDir,
-      Seq(2000000L -> "one two three four five six seven").toDF("doc_id", "text"),
-      batchId = 1L)
-    Dedup.compactLshIndex(spark, indexDir)
-    assert(decision(), "calibrated floor lost at the fold")
-  }
-
-  test("floor calibration: committed-delta mass feeds M; a degenerate sample refuses to persist") {
-    import graft.ops.Dedup
-    val indexDir = java.nio.file.Files.createTempDirectory("lsh-calib-guard").toString
-    val seeded = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"
-    // base cell mass 400 — BELOW the _cell_mass tail floor (1024), so
-    // the base summary alone attributes ZERO mass to the probed cell
-    Dedup.persistLshIndex(
-      (0 until 400).map(i => (i.toLong, seeded)).toDF("doc_id", "text"),
-      indexDir)
-    // un-folded append pushes the probed cell to 400 base + 1100 delta:
-    // the pre-r13 calibration read base _cell_mass only → M = 0 → a
-    // noise-level two-stage win would have persisted floor = 1 (the
-    // documented-not-enforced "calibrate AFTER a fold" contract)
-    Dedup.appendToLshIndex(spark, indexDir,
-      (1000 until 2100).map(i => (i.toLong, seeded)).toDF("doc_id", "text"),
-      batchId = 1L)
-    val probe = Seq(990001L -> seeded).toDF("doc_id", "text")
-    val floor = Dedup.calibrateTwoStageFloor(spark, indexDir, probe, passes = 1)
-    // M = 0 (base, under the tail floor) + 1100 (ledger delta rows):
-    // win → floor = M; lose → floor = max(M+1, default). Either proves
-    // the ledger mass reached the measurement.
-    assert(floor == 1100L || floor == Dedup.twoStageCellRowsFloor,
-      s"calibrated floor $floor ignored the committed-delta mass (expected 1100 or default)")
-
-    // a sample probing no fat cell refuses loudly instead of pinning a
-    // degenerate floor onto the layout
-    val miss = Seq(990002L -> "one two three four five six seven")
-      .toDF("doc_id", "text")
-    val e = intercept[IllegalArgumentException] {
-      Dedup.calibrateTwoStageFloor(spark, indexDir, miss, passes = 1)
-    }
-    assert(e.getMessage.contains("no fat cell"), e.getMessage)
-  }
-
-  test("self-aimed floor calibration: the sample lands in the hottest cell by construction; thin layouts answer None") {
-    import graft.ops.Dedup
-    val indexDir = java.nio.file.Files.createTempDirectory("lsh-selfcal").toString
-    val seeded = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"
-    Dedup.persistLshIndex(
-      (0 until 1200).map(i => (i.toLong, seeded)).toDF("doc_id", "text"),
-      indexDir)
-    assert(Dedup.calibratedFloorOf(spark, indexDir).isEmpty)
-    val floor = Dedup.calibrateTwoStageFloorSelf(spark, indexDir, passes = 1)
-    // no operator-supplied sample, yet M is the clique cell's 1200:
-    // win → floor = M, lose → floor = max(M+1, default) — honest
-    // either way (the same bracket the manual calibration test pins)
-    assert(floor.exists(f => f == 1200L || f == Dedup.twoStageCellRowsFloor),
-      s"self-calibrated floor $floor brackets nothing measurable")
-    assert(Dedup.calibratedFloorOf(spark, indexDir) === floor,
-      "self-calibrated floor not persisted")
-
-    // a thin layout (no fat cell) answers None and persists nothing —
-    // the autopilot form must not die (or pin noise) where the manual
-    // form refuses loudly
-    val thinDir = java.nio.file.Files.createTempDirectory("lsh-selfcal-thin").toString
-    Dedup.persistLshIndex(
-      (0 until 50).map(i => (i.toLong, s"doc $i w${i * 13} w${i * 7} w${i * 3} tail"))
-        .toDF("doc_id", "text"), thinDir)
-    assert(Dedup.calibrateTwoStageFloorSelf(spark, thinDir, passes = 1).isEmpty)
-    assert(Dedup.calibratedFloorOf(spark, thinDir).isEmpty)
-  }
-
-  test("autopilot-triggered calibration: the first fold on an uncalibrated layout measures the floor; calibrated layouts never re-pay") {
-    import graft.ops.{Dedup, IndexMaintenance}
-    val indexDir = java.nio.file.Files.createTempDirectory("lsh-autocal").toString
-    val seeded = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"
-    Dedup.persistLshIndex(
-      (0 until 1200).map(i => (i.toLong, seeded)).toDF("doc_id", "text"),
-      indexDir)
-    Dedup.appendToLshIndex(spark, indexDir,
-      Seq(2000000L -> "one two three four five six seven").toDF("doc_id", "text"),
-      batchId = 1L)
-    val policy = IndexMaintenance.Policy(backlogBatches = 1,
-      calibratePasses = 1)
-    assert(IndexMaintenance.maintainLshIndex(spark, indexDir, policy) ===
-      IndexMaintenance.Compact)
-    val measured = Dedup.calibratedFloorOf(spark, indexDir)
-    assert(measured.exists(f => f == 1200L || f == Dedup.twoStageCellRowsFloor),
-      s"the fold tick did not leave a measured floor: $measured")
-
-    // already-calibrated layout: the next fold CARRIES the floor and
-    // does not re-measure — a sentinel value no calibration could
-    // produce must survive the tick untouched
-    Dedup.writeCalibratedFloor(spark, indexDir, 777L)
-    Dedup.appendToLshIndex(spark, indexDir,
-      Seq(2000001L -> "eight nine ten eleven twelve thirteen fourteen").toDF("doc_id", "text"),
-      batchId = 2L)
-    assert(IndexMaintenance.maintainLshIndex(spark, indexDir, policy) ===
-      IndexMaintenance.Compact)
-    assert(Dedup.calibratedFloorOf(spark, indexDir) === Some(777L),
-      "a calibrated layout re-paid (or lost) its floor at the fold")
   }
 
   test("derived takedown oracles carry their substituted victim filters") {
