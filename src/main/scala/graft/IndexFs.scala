@@ -138,10 +138,10 @@ object IndexFs {
   }
 
   /** Atomic small-file commit: write `.name.tmp`, flush+sync to
-    * durable storage, delete any existing destination (a replayed
-    * batch overwrites its own torn file), rename in. The rename is the
+    * durable storage, rename it over any existing destination (a
+    * replayed batch overwrites its own torn file). The rename is the
     * commit point — readers see the old content or the new, never a
-    * torn prefix.
+    * torn prefix and never no file.
     *
     * The sync goes through the RAW filesystem when the resolved one is
     * a `ChecksumFileSystem` wrapper (the `file:` scheme): the checksum
@@ -180,22 +180,31 @@ object IndexFs {
       out.hflush()
       out.hsync() // durable BEFORE the rename makes it visible
     } finally out.close()
-    // rename with OVERWRITE semantics: a replayed batch rewriting its
-    // own manifest must never open a window where NO manifest file
-    // exists (a delete-then-rename would briefly make a concurrent
-    // manifestIds listing resolve the OLDER manifest as "latest").
-    // FileContext provides atomic overwrite on file:/hdfs:; schemes
-    // without an AbstractFileSystem binding fall back to
-    // delete+rename, accepting the narrow window there.
-    try {
-      val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-        p.toUri, spark.sparkContext.hadoopConfiguration)
-      fc.rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    } catch {
-      case _: org.apache.hadoop.fs.UnsupportedFileSystemException =>
-        fs.delete(p, false)
-        if (!fs.rename(tmp, p))
-          throw new java.io.IOException(s"atomic commit failed: $tmp -> $p")
+    // rename with OVERWRITE semantics: a rewrite (a replayed manifest,
+    // every delta-ledger or offset-ledger swap) must never open a
+    // window where NO file exists — readers require these files and a
+    // concurrent one would fail on the gap. The local raw filesystem
+    // renames with rename(2), which replaces the destination
+    // atomically; FileContext's OVERWRITE on file: deletes the
+    // destination first (AbstractFileSystem's default), so it serves
+    // only the other schemes (atomic on hdfs:). Schemes without an
+    // AbstractFileSystem binding fall back to delete+rename,
+    // accepting the narrow window there.
+    def renameOrFail(): Unit =
+      if (!fs.rename(tmp, p))
+        throw new java.io.IOException(s"atomic commit failed: $tmp -> $p")
+    fs match {
+      case _: org.apache.hadoop.fs.RawLocalFileSystem => renameOrFail()
+      case _ =>
+        try {
+          val fc = org.apache.hadoop.fs.FileContext.getFileContext(
+            p.toUri, spark.sparkContext.hadoopConfiguration)
+          fc.rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+        } catch {
+          case _: org.apache.hadoop.fs.UnsupportedFileSystemException =>
+            fs.delete(p, false)
+            renameOrFail()
+        }
     }
   }
 }
@@ -234,12 +243,9 @@ private[graft] object GenManifest {
   /** `lgen` = the generation at which the live LABEL SPACE was
     * created — the last re-clustering (Lloyd) generation, or the
     * initial persist. A label-preserving compaction advances `gen` but
-    * carries `lgen`; a delta whose `_gen` tag is >= `lgen` carries
-    * labels that mean the same thing as the base's, one tagged below
-    * `lgen` (or untagged) was assigned against a superseded centroid
-    * set. Old manifests without the key read `lgen = gen`
-    * (conservative: any pre-upgrade delta routes to the full-read /
-    * relabel paths). */
+    * carries `lgen`; a delta whose ledger `gen` is >= `lgen` carries
+    * labels that mean the same thing as the base's, one below `lgen`
+    * was assigned against a superseded centroid set. */
   final case class State(seq: Long, gen: Long, floor: Long, lgen: Long)
 
   def manifestIds(spark: SparkSession, dir: String): Seq[Long] =
@@ -256,7 +262,9 @@ private[graft] object GenManifest {
       .filter(_.nonEmpty).map { l =>
         val Array(k, v) = l.split('\t'); k -> v.toLong
       }.toMap
-    State(seq, kv("gen"), kv("floor"), kv.getOrElse("lgen", kv("gen")))
+    def field(k: String): Long = kv.getOrElse(k,
+      throw new IllegalStateException(s"$dir/m$seq: manifest records no $k"))
+    State(seq, field("gen"), field("floor"), field("lgen"))
   }
 
   /** `lgen < 0` (the default) records `lgen = gen` — right for the
@@ -270,23 +278,21 @@ private[graft] object GenManifest {
 
   /** One committed delta's metadata as recorded in the delta LEDGER:
     * `gen` is the centroid generation whose label space assigned the
-    * delta's cells (`-1` = unknown/untagged — readers take the
-    * conservative full-read route; constant for families whose label
-    * space never changes, e.g. LSH bands), `cells` the root-relative
-    * cell directory fragments the delta actually wrote — `label=5` for
-    * the IVF layout, `band_id=0/sig_p=ab` for LSH (`None` = unknown —
-    * readers fall back to per-cell existence checks). `tomb` marks a
-    * TOMBSTONE delta (a retention/takedown delete): its data is a key
-    * list under `delta/t<id>` (not band/corpus rows under `b<id>`),
-    * readers subtract it instead of adding it, and the next fold
-    * applies and retires it. `rows` (optional, aligned with `cells`)
-    * records each cell's row count at append time — the per-probe
-    * decision inputs that must not re-read delta footers. On a
-    * TOMBSTONE entry (`cells = None`) `rows` is a single-element list
-    * carrying the key-list row count — the autopilot's
-    * `Signals.tombRows` input, recorded at write so the signal costs
-    * zero reads per tick. */
-  final case class DeltaEntry(id: Long, gen: Long, cells: Option[Seq[String]],
+    * delta's cells (constant for families whose label space never
+    * changes, e.g. LSH bands), `cells` the root-relative cell directory
+    * fragments the delta actually wrote — `label=5` for the IVF layout,
+    * `band_id=0/sig_p=ab` for LSH. `tomb` marks a TOMBSTONE delta (a
+    * retention/takedown delete): its data is a key list under
+    * `delta/t<id>` (not band/corpus rows under `b<id>`) and it has no
+    * cells (`?` on disk); readers subtract it instead of adding it, and
+    * the next fold applies and retires it. `rows` (aligned with
+    * `cells`; None = not recorded, the IVF data-delta form) records
+    * each cell's row count at append time — the per-probe decision
+    * inputs that must not re-read delta footers. On a TOMBSTONE entry
+    * `rows` is a single-element list carrying the key-list row count —
+    * the autopilot's `Signals.tombRows` input, recorded at write so the
+    * signal costs zero reads per tick. */
+  final case class DeltaEntry(id: Long, gen: Long, cells: Seq[String],
       tomb: Boolean = false, rows: Option[Seq[Long]] = None)
 
   /** The delta ledger: ONE small file (`delta/ledger`) naming every
@@ -298,34 +304,35 @@ private[graft] object GenManifest {
     * sequential streaming-ingest contract; compaction and GC never
     * write it (entries at or below the manifest floor are dead:
     * readers filter them out, the writer trims them on its next
-    * commit). For ledgered layouts the ledger entry IS the delta
-    * commit point: a delta whose data landed (`_SUCCESS`) but whose
-    * ledger write crashed stays invisible until the batch replays —
-    * the same half-committed-batch semantics as a torn `_SUCCESS`.
-    * `None` = no ledger file (pre-ledger layout; callers rebuild the
-    * entries from the directory listing + per-delta sidecars). */
-  def readLedger(spark: SparkSession, dir: String): Option[Seq[DeltaEntry]] = {
+    * commit). The ledger entry IS the delta commit point: a delta
+    * whose data landed (`_SUCCESS`) but whose ledger write crashed
+    * stays invisible until the batch replays — the same
+    * half-committed-batch semantics as a torn `_SUCCESS`. Every persist
+    * entry point writes an empty ledger before its manifest commit, so
+    * a missing ledger fails loudly. Rows are five tab-separated
+    * columns: id, gen, cells, kind (`d`/`t`), per-cell rows. */
+  def readLedger(spark: SparkSession, dir: String): Seq[DeltaEntry] = {
     val p = s"$dir/delta/ledger"
-    if (!IndexFs.exists(spark, p)) None
-    else Some(IndexFs.readUtf8(spark, p).linesIterator.filter(_.nonEmpty).map { l =>
-      // columns 4 (kind: d=data, t=tombstone) and 5 (per-cell rows)
-      // were added later; a ledger written before them reads as
-      // data-kind with unknown rows — exactly its original meaning
-      val f = l.split("\t", -1)
-      DeltaEntry(f(0).toLong, f(1).toLong,
-        if (f.length < 3 || f(2) == "?") None
-        else Some(f(2).split(',').filter(_.nonEmpty).toSeq),
-        tomb = f.length > 3 && f(3) == "t",
-        rows = if (f.length < 5 || f(4) == "?") None
-          else Some(f(4).split(',').filter(_.nonEmpty).map(_.toLong).toSeq))
-    }.toSeq)
+    if (!IndexFs.exists(spark, p))
+      throw new IllegalStateException(s"missing $p: the index's delta ledger")
+    IndexFs.readUtf8(spark, p).linesIterator.filter(_.nonEmpty).map { l =>
+      val Array(id, gen, cs, kind, rs) = l.split("\t", -1)
+      val tomb = kind == "t"
+      if (!tomb && cs == "?")
+        throw new IllegalStateException(s"$p: data delta $id records no cell list")
+      DeltaEntry(id.toLong, gen.toLong,
+        if (tomb) Nil else cs.split(',').filter(_.nonEmpty).toSeq,
+        tomb = tomb,
+        rows = if (rs == "?") None
+          else Some(rs.split(',').filter(_.nonEmpty).map(_.toLong).toSeq))
+    }.toSeq
   }
 
   def writeLedger(spark: SparkSession, dir: String,
       entries: Seq[DeltaEntry]): Unit =
     IndexFs.writeUtf8Atomic(spark, s"$dir/delta/ledger",
       entries.sortBy(_.id).map { e =>
-        val cs = e.cells.fold("?")(_.mkString(","))
+        val cs = if (e.tomb) "?" else e.cells.mkString(",")
         val rs = e.rows.fold("?")(_.mkString(","))
         s"${e.id}\t${e.gen}\t$cs\t${if (e.tomb) "t" else "d"}\t$rs"
       }.mkString("", "\n", "\n"))
@@ -457,11 +464,18 @@ private[graft] object GenLifecycle {
       Some(IndexFs.readUtf8(spark, s"$root/$name"))
     else None
 
+  /** [[readMeta]] for a sidecar its writer always lays down before
+    * the commit point: absent means the layout lost its metadata, which
+    * fails loudly naming the file instead of guessing a default. */
+  def requireMeta(spark: SparkSession, root: String, name: String): String =
+    readMeta(spark, root, name).getOrElse(
+      throw new IllegalStateException(s"missing $root/$name"))
+
   def writeGenId(spark: SparkSession, root: String): Unit =
     writeMeta(spark, root, "_id", java.util.UUID.randomUUID().toString)
 
-  def readGenId(spark: SparkSession, root: String): Option[String] =
-    readMeta(spark, root, "_id").map(_.trim)
+  def readGenId(spark: SparkSession, root: String): String =
+    requireMeta(spark, root, "_id").trim
 
   /** STREAMING-OWNERSHIP marker of a persisted index's delta axis:
     * the highest batch id a streaming ingest loop has claimed, written
@@ -574,12 +588,10 @@ private[graft] object GenLifecycle {
   }
 
   /** Retract any prior (id, kind) entry, run the data write, append
-    * the entry it returns (floor-trimmed). `prior` is the caller's
-    * already-resolved entry list — the families differ only in their
-    * pre-ledger fallback for it. */
-  def commitDelta(spark: SparkSession, dir: String,
-      prior: Seq[GenManifest.DeltaEntry], floor: Long, id: Long,
+    * the entry it returns (floor-trimmed). */
+  def commitDelta(spark: SparkSession, dir: String, floor: Long, id: Long,
       tomb: Boolean)(writeData: => GenManifest.DeltaEntry): Unit = {
+    val prior = GenManifest.readLedger(spark, dir)
     if (prior.exists(e => e.id == id && e.tomb == tomb))
       GenManifest.writeLedger(spark, dir,
         prior.filterNot(e => e.id == id && e.tomb == tomb))

@@ -169,12 +169,12 @@ object ServeSoak {
           // one-pass form must read every row's shingle set, the
           // two-stage form screens on (doc_id, sig) first
           Leg(tag, dir, "lsh_hot",
-            () => { graft.ops.Dedup.nearDupCheck(spark, lshHotDir, probe,
-              prefixLen = 1).collect(); () },
+            () => { graft.ops.Dedup.nearDupCheck(spark, lshHotDir, probe)
+              .collect(); () },
             lshHotBuild, docs, vecs),
           Leg(tag, dir, "lsh_hot_2s",
             () => { graft.ops.Dedup.nearDupCheck(spark, lshHotDir, probe,
-              prefixLen = 1, twoStage = true).collect(); () },
+              twoStage = true).collect(); () },
             lshHotBuild, docs, vecs),
           Leg(tag, dir, "ivf_serve",
             () => { graft.ops.Similarity.ivfProbeVectorServed(spark, ivfDir, qvec).collect(); () },

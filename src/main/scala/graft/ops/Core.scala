@@ -37,10 +37,6 @@ object Core {
           count(lit(1)).as("count_order"))
         .orderBy(col("l_returnflag"), col("l_linestatus")))
 
-  /** P1/P2/F14 — semi-structured JSON field extraction with null-on-bad
-    * parse (the dirty-data contract of `app/dwd/BaseLogApp.java:57-70`:
-    * unparseable rows yield NULL and are routed, parseable rows carry
-    * the extracted field). */
   /** Single source of the engine-independent INTEGRAL gate every
     * dirty-data JSON extraction applies (p1/f15/f16/f17, both
     * engines): the engines' TRY_CASTs disagree on decimals (DuckDB
@@ -51,6 +47,10 @@ object Core {
     * use if any oracle's embedded copy diverges from this constant. */
   private[ops] val integralRe = "^-?[0-9]+$"
 
+  /** P1/P2/F14 — semi-structured JSON field extraction with null-on-bad
+    * parse (the dirty-data contract of `app/dwd/BaseLogApp.java:57-70`:
+    * unparseable rows yield NULL and are routed, parseable rows carry
+    * the extracted field). */
   val p1JsonProps = QueryDef(
     "p1_json_props",
     Some("""SELECT event_id,

@@ -159,11 +159,6 @@ object Dedup {
             |ORDER BY doc_a, doc_b""".stripMargin),
     (spark, dir) => bandPairs(shingles(spark, dir), spark).orderBy("doc_a", "doc_b"))
 
-  /** n-gram Jaccard verification over the LSH candidates: exact shingle
-    * set Jaccard, thresholded — the verify stage of the dedup pipeline.
-    * Runs on candidates only, never all pairs, and per pair as an array
-    * intersection (set sizes are document-bounded), not a shingle-level
-    * join explosion. */
   /** Single source of truth for the confirmed-pair threshold: both the
     * pair listing and cluster formation build on exactly these edges. */
   private val jaccardThreshold = 0.4
@@ -249,27 +244,6 @@ object Dedup {
         concat((0 to 3).map(i => sliceMin("m2", i)): _*).as("band1"))
   }
 
-  /** One row per (doc, LSH band) carrying everything a near-dup probe
-    * needs: the band signature (candidate key), the cell prefix
-    * `sig_p` (first 2 hex chars — the partition cell), and the doc's
-    * full shingle set (the exact-verify side INLINED, so a probe never
-    * needs a second lookup relation: 2× shingle storage traded for
-    * cell-local verification, the serving-layout tradeoff).
-    *
-    * `exactFallback` closes the short-doc blind spot: documents with
-    * fewer than 3 whitespace tokens produce no shingles, so the
-    * MinHash bands never see them. With the fallback on, each such doc
-    * (with at least one non-empty token) emits ONE extra row under the
-    * reserved `band_id = 2`, whose signature is the bag-of-words
-    * fingerprint (md5 over the sorted distinct token set) and whose
-    * "shingle set" is the distinct token set — so an identical or
-    * token-reordered short doc collides in its fallback cell and
-    * verifies at Jaccard 1.0. Zero-token docs stay un-indexed (no
-    * content to match on). ON by default for the ingest-facing persist
-    * path ([[persistLshIndex]]) so a seeded base participates in the
-    * same short-doc contract `dedupIngest` probes with; the
-    * oracle-checked `dedup_against_index` turns it off explicitly
-    * (its oracle mirrors the shingle pipeline only). */
   /** Band rows over an ARBITRARY `(doc_id, s)` element relation — the
     * element-agnostic core of [[bandRows]]: MinHash signatures, the
     * inlined element set, one row per (doc, band) with the cell
@@ -304,6 +278,27 @@ object Dedup {
         col("ss"))
   }
 
+  /** One row per (doc, LSH band) carrying everything a near-dup probe
+    * needs: the band signature (candidate key), the cell prefix
+    * `sig_p` (first 2 hex chars — the partition cell), and the doc's
+    * full shingle set (the exact-verify side INLINED, so a probe never
+    * needs a second lookup relation: 2× shingle storage traded for
+    * cell-local verification, the serving-layout tradeoff).
+    *
+    * `exactFallback` closes the short-doc blind spot: documents with
+    * fewer than 3 whitespace tokens produce no shingles, so the
+    * MinHash bands never see them. With the fallback on, each such doc
+    * (with at least one non-empty token) emits ONE extra row under the
+    * reserved `band_id = 2`, whose signature is the bag-of-words
+    * fingerprint (md5 over the sorted distinct token set) and whose
+    * "shingle set" is the distinct token set — so an identical or
+    * token-reordered short doc collides in its fallback cell and
+    * verifies at Jaccard 1.0. Zero-token docs stay un-indexed (no
+    * content to match on). ON by default for the ingest-facing persist
+    * path ([[persistLshIndex]]) so a seeded base participates in the
+    * same short-doc contract `dedupIngest` probes with; the
+    * oracle-checked `dedup_against_index` turns it off explicitly
+    * (its oracle mirrors the shingle pipeline only). */
   private def bandRows(docs: DataFrame, prefixLen: Int,
       exactFallback: Boolean = false): DataFrame = {
     val shingled = bandRowsOfElems(shinglesOf(docs), prefixLen)
@@ -341,8 +336,9 @@ object Dedup {
     * one-giant-task skew stall cannot happen. The input is
     * materialized once (releasably) because the slot assignment needs
     * per-cell counts — one cheap count pass over the materialized
-    * rows instead of recomputing the band pipeline twice. */
-  /** Returns the per-cell row counts as `(cellDirName, rows)` — the
+    * rows instead of recomputing the band pipeline twice.
+    *
+    * Returns the per-cell row counts as `(cellDirName, rows)` — the
     * writer computes them for slot assignment anyway, and the append
     * path records them in its ledger entry. */
   private def writeBandCells(rows: DataFrame, path: String,
@@ -360,28 +356,22 @@ object Dedup {
   private def lshBase(indexDir: String, gen: Long) =
     s"$indexDir/${lshPrefix}_g$gen"
 
-  /** The PERSISTED cell-prefix length of an LSH index (None on a
-    * pre-meta layout). prefixLen is a LAYOUT property — the cell paths
-    * are `sig_p=substring(sig, 1, len)` — so a probe or append banding
-    * at a different length than the index was written with builds
-    * paths that exist for NO cell and silently returns/contributes
-    * nothing (the same silent-empty class as the prefixLen=0
-    * foot-gun). Writers persist it once; probes and appends resolve it
-    * from the index and treat their parameter as a fallback for
-    * pre-meta layouts only. */
-  private def readLshPrefixLen(spark: SparkSession, indexDir: String): Option[Int] =
-    graft.GenLifecycle.readMeta(spark, indexDir, "lsh_meta").map(_.trim.toInt)
+  /** The PERSISTED cell-prefix length of an LSH index (`lsh_meta`,
+    * the length appends and probes band at). prefixLen is a LAYOUT
+    * property — the cell paths are `sig_p=substring(sig, 1, len)` — so
+    * a probe or append banding at a different length than the index
+    * was written with would build paths that exist for NO cell and
+    * silently return/contribute nothing. Writers persist it before the
+    * manifest commit; probes and appends take no length of their own. */
+  private def readLshPrefixLen(spark: SparkSession, indexDir: String): Int =
+    graft.GenLifecycle.requireMeta(spark, indexDir, "lsh_meta").trim.toInt
 
-  /** The LIVE generation's prefix length — what the next append/probe
-    * resolves and what a re-bucketing decision steps from (the
-    * maintenance autopilot's input). Resolution order: the current
-    * generation's own `_prefix_len`, the top-level pointer, then the
-    * historical default 2 for pre-meta layouts. */
-  def lshPrefixLenOf(spark: SparkSession, indexDir: String): Int = {
-    val genLen = graft.GenManifest.resolve(spark, indexDir)
-      .flatMap(st => readGenPrefixLen(spark, lshBase(indexDir, st.gen)))
-    genLen.orElse(readLshPrefixLen(spark, indexDir)).getOrElse(2)
-  }
+  /** The LIVE generation's prefix length (its own `_prefix_len`) —
+    * what a re-bucketing decision steps from (the maintenance
+    * autopilot's input). */
+  def lshPrefixLenOf(spark: SparkSession, indexDir: String): Int =
+    readGenPrefixLen(spark, lshBase(indexDir, graft.GenLifecycle
+      .resolveOrThrow(spark, indexDir, "LSH", "persistLshIndex").gen))
 
   /** Cells below this mass are never worth a two-stage read (the
     * measured parity zone starts well above one parquet page), so the
@@ -438,24 +428,20 @@ object Dedup {
       (head.mkString("\t") +: tail).mkString("\n"))
   }
 
-  /** `(hottest, fat-cell tail, tail-truncated)` of a generation —
-    * None on a pre-mass layout. One metadata read. Unknown line-1 tags
-    * are ignored (older layouts may carry a `floor=N` tag, which no
-    * reader honours). */
+  /** `(hottest, fat-cell tail, tail-truncated)` of a generation. One
+    * metadata read. Unknown line-1 tags are ignored (older layouts may
+    * carry a `floor=N` tag, which no reader honours). */
   private def readGenCellMassFull(spark: SparkSession,
-      root: String): Option[(Long, Map[String, Long], Boolean)] =
-    graft.GenLifecycle.readMeta(spark, root, "_cell_mass").map { raw =>
-      val lines = raw.split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
-      val headFields = lines.head.split("\t")
-      val tail = lines.drop(1).map { l =>
-        val Array(cell, n) = l.split("\t")
-        cell -> n.toLong
-      }.toMap
-      (headFields(0).toLong, tail, headFields.drop(1).contains("truncated"))
-    }
-
-  private def readGenCellMass(spark: SparkSession, root: String): Option[Long] =
-    readGenCellMassFull(spark, root).map(_._1)
+      root: String): (Long, Map[String, Long], Boolean) = {
+    val lines = graft.GenLifecycle.requireMeta(spark, root, "_cell_mass")
+      .split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
+    val headFields = lines.head.split("\t")
+    val tail = lines.drop(1).map { l =>
+      val Array(cell, n) = l.split("\t")
+      cell -> n.toLong
+    }.toMap
+    (headFields(0).toLong, tail, headFields.drop(1).contains("truncated"))
+  }
 
   /** Fat-cell floor of the two-stage AUTO decision ([[twoStageAuto]],
     * [[nearDupCheckWithProbe]] with `twoStage = None`): the measured
@@ -477,9 +463,9 @@ object Dedup {
   private def deltaMassFor(liveDataEntries: Seq[graft.GenManifest.DeltaEntry],
       b: Int, p: String): Long =
     liveDataEntries.iterator.map { e =>
-      (e.cells, e.rows) match {
-        case (Some(cs), Some(rs)) if cs.length == rs.length =>
-          cs.iterator.zip(rs.iterator).collect {
+      e.rows match {
+        case Some(rs) if e.cells.length == rs.length =>
+          e.cells.iterator.zip(rs.iterator).collect {
             case (c, r) if c.startsWith(s"band_id=$b/sig_p=") && {
               val cp = c.substring(c.indexOf("sig_p=") + 6)
               cp.startsWith(p) || p.startsWith(cp)
@@ -498,14 +484,12 @@ object Dedup {
     * actually lands in, so a skewed layout that reads fat here still
     * serves one-pass probes into its page-sized cells. One manifest
     * resolve + one metadata line — O(1) in corpus, backlog and probe
-    * size. A pre-mass layout (no `_cell_mass`) answers false: the
-    * one-pass plan is the safe default. `floor` defaults to the
-    * measured constant [[twoStageCellRowsFloor]]; no floor is read
-    * from the index. */
+    * size. `floor` defaults to the measured constant
+    * [[twoStageCellRowsFloor]]; no floor is read from the index. */
   def twoStageAuto(spark: SparkSession, indexDir: String,
       floor: Long = twoStageCellRowsFloor): Boolean =
     graft.GenManifest.resolve(spark, indexDir).exists { st =>
-      readGenCellMass(spark, lshBase(indexDir, st.gen)).exists(_ >= floor)
+      readGenCellMassFull(spark, lshBase(indexDir, st.gen))._1 >= floor
     }
 
   /** Explicit read schema for a band-cell layout — NEVER inferred.
@@ -537,7 +521,8 @@ object Dedup {
     * size it to the corpus — the layout contract is cells small enough
     * that a batch's probe I/O is proportional to its candidate mass,
     * not the corpus, but large enough that a cell is a real file, not
-    * a fragment. The probe side must use the same `prefixLen`.
+    * a fragment. Probes and appends read the length back from the
+    * index.
     *
     * On-disk lifecycle is the [[graft.GenManifest]] protocol: the
     * base lands as generation 0 (`bands_g0`) and an atomic manifest
@@ -568,8 +553,7 @@ object Dedup {
   private def persistBandIndex(spark: SparkSession, indexDir: String,
       rows: DataFrame, prefixLen: Int, maxCellRows: Long): Unit = {
     graft.GenManifest.reset(spark, indexDir, Seq(lshPrefix))
-    // empty delta ledger from birth — "ledger absent" = pre-ledger
-    // layout, never a fresh index (the IVF persist discipline)
+    // empty delta ledger from birth: every reader requires one
     graft.GenManifest.writeLedger(spark, indexDir, Seq.empty)
     // prefixLen is persisted WITH the layout (before the manifest
     // commit, so a committed index always carries it): probes/appends
@@ -589,17 +573,6 @@ object Dedup {
     graft.GenManifest.commit(spark, indexDir, seq = 0, gen = 0, floor = -1)
   }
 
-  /** Every committed LSH delta's ledger entry, floor-unfiltered — ONE
-    * read on ledgered layouts; pre-ledger layouts rebuild ids from the
-    * directory listing (cells unknown → per-cell existence checks at
-    * probe time). The LSH label space never changes, so `gen` carries
-    * no routing meaning here (always current). */
-  private def lshDeltaEntries(spark: SparkSession,
-      indexDir: String): Seq[graft.GenManifest.DeltaEntry] =
-    graft.GenManifest.readLedger(spark, indexDir).getOrElse(
-      graft.GenManifest.deltaIds(spark, indexDir, above = Long.MinValue)
-        .map(id => graft.GenManifest.DeltaEntry(id, 0L, None)))
-
   /** Grow the persisted index without rewriting it: the batch's band
     * rows land under `delta/b<batchId>` (same cell layout); a replayed
     * batch OVERWRITES its own delta — batchId idempotence, the
@@ -612,7 +585,7 @@ object Dedup {
     * half-overwritten directory), and it records the delta's cell
     * list so probes resolve ALL delta metadata in one read. */
   def appendToLshIndex(spark: SparkSession, indexDir: String,
-      newDocs: DataFrame, batchId: Long, prefixLen: Int = 2,
+      newDocs: DataFrame, batchId: Long,
       exactFallback: Boolean = false,
       maxCellRows: Long = defaultMaxCellRows): Unit = {
     // once a dedupIngest/dedupIngestCdc stream owns the delta axis, a
@@ -622,12 +595,9 @@ object Dedup {
     // the unchecked band-rows form below
     graft.GenLifecycle.assertAppendOnAxis(spark, indexDir, batchId,
       "StreamOps.dedupIngest / dedupIngestCdc")
-    // the index's persisted prefixLen wins — a caller-supplied
-    // mismatch would write delta cells no probe of this index ever
-    // lists (prefixLen param = pre-meta-layout fallback only)
-    val effPrefix = readLshPrefixLen(spark, indexDir).getOrElse(prefixLen)
     appendBandRowsToLshIndex(spark, indexDir,
-      bandRows(newDocs, effPrefix, exactFallback), batchId, maxCellRows)
+      bandRows(newDocs, readLshPrefixLen(spark, indexDir), exactFallback),
+      batchId, maxCellRows)
   }
 
   /** [[appendToLshIndex]] over ALREADY-BANDED rows `(doc_id, sig, ss,
@@ -647,8 +617,8 @@ object Dedup {
       maxCellRows: Long = defaultMaxCellRows): Unit = {
     val root = s"$indexDir/delta/b$batchId"
     val floor = graft.GenManifest.resolve(spark, indexDir).map(_.floor).getOrElse(-1L)
-    graft.GenLifecycle.commitDelta(spark, indexDir,
-      lshDeltaEntries(spark, indexDir), floor, batchId, tomb = false) {
+    graft.GenLifecycle.commitDelta(spark, indexDir, floor, batchId,
+        tomb = false) {
       // per-cell row counts come back FROM THE WRITER (it computes
       // them for slot assignment anyway — no extra job) and ride the
       // ledger entry: the per-probe two-stage AUTO decision folds
@@ -662,7 +632,7 @@ object Dedup {
       val cells = graft.IndexFs.listNames(spark, root, "band_id=.*").flatMap { b =>
         graft.IndexFs.listNames(spark, s"$root/$b", "sig_p=.*").map(p => s"$b/$p")
       }.sorted
-      graft.GenManifest.DeltaEntry(batchId, 0L, Some(cells),
+      graft.GenManifest.DeltaEntry(batchId, 0L, cells,
         rows = Some(cells.map(c => counts.getOrElse(c, 0L))))
     }
   }
@@ -726,8 +696,8 @@ object Dedup {
     // retract → write → commit: a concurrent probe never subtracts a
     // half-overwritten key list. One file — a tombstone is
     // control-plane sized and every probe broadcast-reads it whole.
-    graft.GenLifecycle.commitDelta(spark, indexDir,
-      lshDeltaEntries(spark, indexDir), st.floor, batchId, tomb = true) {
+    graft.GenLifecycle.commitDelta(spark, indexDir, st.floor, batchId,
+        tomb = true) {
       docIds.select(col("doc_id").cast("long").as("doc_id")).distinct()
         .coalesce(1).write.mode("overwrite")
         .parquet(s"$indexDir/delta/t$batchId")
@@ -739,7 +709,7 @@ object Dedup {
       // the row-backlog nor the file-count signal
       val n = spark.read.schema(lshTombReadSchema)
         .parquet(s"$indexDir/delta/t$batchId").count()
-      graft.GenManifest.DeltaEntry(batchId, 0L, None, tomb = true,
+      graft.GenManifest.DeltaEntry(batchId, 0L, Nil, tomb = true,
         rows = Some(Seq(n)))
     }
   }
@@ -779,14 +749,6 @@ object Dedup {
     tomb.fold(rows)(t => rows.join(broadcast(t),
       rows(keyCol) === t("t_doc") && t("t_del") > lit(srcId), "left_anti"))
 
-  /** The RESOLVED `(root, cellPaths)` list of a probe across the base
-    * generation and the committed deltas above the manifest floor —
-    * ONE metadata pass (manifest resolve, base-cell existence filter,
-    * one ledger read) whose result every read the probe issues shares,
-    * so the two-stage probe pays the SAME seam calls as the
-    * single-plan form. `belowBatch` bounds which deltas count
-    * (exclusive), so a REPLAYED ingest batch never probes against its
-    * own torn output. */
   /** A generation's OWN prefix length, stored as `_prefix_len` INSIDE
     * the generation directory (written after the cell data, before the
     * manifest commit; GC retires it with the directory; Spark's file
@@ -794,8 +756,8 @@ object Dedup {
     * global — so a re-bucketing compaction is atomic under the
     * manifest swap: a reader pinned to either manifest derives that
     * generation's cell paths from that generation's OWN length. */
-  private def readGenPrefixLen(spark: SparkSession, root: String): Option[Int] =
-    graft.GenLifecycle.readMeta(spark, root, "_prefix_len").map(_.trim.toInt)
+  private def readGenPrefixLen(spark: SparkSession, root: String): Int =
+    graft.GenLifecycle.requireMeta(spark, root, "_prefix_len").trim.toInt
 
   /** The prefix length a ledger cell name was written at —
     * `band_id=b/sig_p=<prefix>` carries it directly, so every delta's
@@ -805,14 +767,22 @@ object Dedup {
   private def cellNameLen(name: String): Int =
     name.length - name.indexOf("sig_p=") - "sig_p=".length
 
-  /** `st`/`baseLen` are RESOLVED BY THE CALLER and shared with the
-    * probe's other metadata consumers (the two-stage auto decision) —
-    * one manifest resolve and one generation-length read per probe,
-    * whatever the mode (the seam-call discipline IndexFsSpec pins). */
+  /** The RESOLVED `(root, cellPaths)` list of a probe across the base
+    * generation and the committed deltas above the manifest floor —
+    * ONE metadata pass (manifest resolve, base-cell existence filter,
+    * one ledger read) whose result every read the probe issues shares,
+    * so the two-stage probe pays the SAME seam calls as the
+    * single-plan form. `belowBatch` bounds which deltas count
+    * (exclusive), so a REPLAYED ingest batch never probes against its
+    * own torn output. `st`/`baseLen`/`entries` are RESOLVED BY THE
+    * CALLER and shared with the probe's other metadata consumers (the
+    * two-stage auto decision) — one manifest resolve and one
+    * generation-length read per probe, whatever the mode (the
+    * seam-call discipline IndexFsSpec pins). */
   private def lshCellPaths(spark: SparkSession, indexDir: String,
       st: graft.GenManifest.State, baseLen: Int,
       prefixesAt: Int => Seq[(Int, String)], belowBatch: Long,
-      fallbackLen: Int, entries: Seq[graft.GenManifest.DeltaEntry])
+      entries: Seq[graft.GenManifest.DeltaEntry])
       : Seq[(Long, String, Seq[String])] = {
     // cell names are derived PER ROOT from the probe's distinct sig
     // PREFIXES at that root's own prefix length — mixed-length serving
@@ -838,17 +808,10 @@ object Dedup {
       .filter(e => !e.tomb && e.id > st.floor && e.id < belowBatch).sortBy(_.id)
       .flatMap { e =>
         val root = s"$indexDir/delta/b${e.id}"
-        e.cells match {
-          case Some(cs) if cs.isEmpty => None
-          case Some(cs) =>
-            val hit = namesAt(cellNameLen(cs.head)).filter(cs.toSet)
-            if (hit.isEmpty) None
-            else Some((e.id, root, hit.map(n => s"$root/$n")))
-          case None =>
-            val paths = namesAt(fallbackLen).map(n => s"$root/$n")
-              .filter(p => graft.IndexFs.isDir(spark, p))
-            if (paths.isEmpty) None else Some((e.id, root, paths))
-        }
+        val hit = e.cells.headOption.toSeq
+          .flatMap(c => namesAt(cellNameLen(c)).filter(e.cells.toSet))
+        if (hit.isEmpty) None
+        else Some((e.id, root, hit.map(n => s"$root/$n")))
       }
     base.toSeq ++ deltas
   }
@@ -861,17 +824,15 @@ object Dedup {
     * those cells from base+deltas, candidate-join on the full band
     * signature, exact-Jaccard verify on the inlined shingle sets.
     * Returns `(probe_id, index_id, jac)` for every confirmed pair at
-    * `threshold` or above. `prefixLen` is resolved from the index's
-    * persisted metadata when present — the parameter is a fallback for
-    * pre-meta layouts only (a mismatched probe would silently return
-    * zero candidates). */
+    * `threshold` or above. The probe bands at the index's persisted
+    * prefix length (`lsh_meta`); there is no caller-side length. */
   def nearDupCheck(spark: SparkSession, indexDir: String,
       probeDocs: DataFrame, threshold: Double = jaccardThreshold,
-      belowBatch: Long = Long.MaxValue, prefixLen: Int = 2,
+      belowBatch: Long = Long.MaxValue,
       broadcastProbe: Boolean = true, exactFallback: Boolean = false,
       twoStage: Boolean = false): DataFrame =
     nearDupCheckReleasable(spark, indexDir, probeDocs, threshold,
-      belowBatch, prefixLen, broadcastProbe, exactFallback, twoStage)._1
+      belowBatch, broadcastProbe, exactFallback, twoStage)._1
 
   /** [[nearDupCheck]] plus the release handle for the pinned probe
     * relation. A once-per-query caller can ignore it (the
@@ -888,11 +849,10 @@ object Dedup {
     * the join side from real sizes instead. */
   private[graft] def nearDupCheckReleasable(spark: SparkSession,
       indexDir: String, probeDocs: DataFrame, threshold: Double,
-      belowBatch: Long, prefixLen: Int, broadcastProbe: Boolean,
+      belowBatch: Long, broadcastProbe: Boolean,
       exactFallback: Boolean, twoStage: Boolean = false): (DataFrame, () => Unit) = {
     val (out, _, release) = nearDupCheckWithProbe(spark, indexDir, probeDocs,
-      threshold, belowBatch, prefixLen, broadcastProbe, exactFallback,
-      Some(twoStage))
+      threshold, belowBatch, broadcastProbe, exactFallback, Some(twoStage))
     (out, release)
   }
 
@@ -903,8 +863,9 @@ object Dedup {
     * decision-identical by construction. Keyed by indexDir so two
     * concurrent streams in one JVM never overwrite each other's
     * reading (a ServeSoak per-batch probe-form series must record its
-    * OWN index's decision). */
-  /** Access-ordered LRU capped at 64 live index dirs: probe-heavy
+    * OWN index's decision).
+    *
+    * Access-ordered LRU capped at 64 live index dirs: probe-heavy
     * long-lived JVMs create per-query temp index dirs (the TempDirs /
     * dedup_against_index pattern), and an unbounded map would hold one
     * entry per dead dir for the process lifetime. 64 concurrent
@@ -963,16 +924,15 @@ object Dedup {
     * (measured — ServeSoak ×100 lsh_serve 0.72 s vs lsh_2stage
     * 0.78 s on a layout whose hottest clique cell cleared the floor).
     * A floor below [[cellMassTailFloor]] degrades to the layout-level
-    * hottest answer (the tail doesn't record cells that small); a
-    * pre-mass layout answers one-pass. */
+    * hottest answer (the tail doesn't record cells that small). */
   private[graft] def nearDupCheckWithProbe(spark: SparkSession,
       indexDir: String, probeDocs: DataFrame, threshold: Double,
-      belowBatch: Long, prefixLen: Int, broadcastProbe: Boolean,
+      belowBatch: Long, broadcastProbe: Boolean,
       exactFallback: Boolean, twoStage: Option[Boolean] = Some(false),
       twoStageFloor: Long = twoStageCellRowsFloor): (DataFrame, DataFrame, () => Unit) =
     nearDupCheckWithProbeRows(spark, indexDir,
       len => bandRows(probeDocs, len, exactFallback), threshold,
-      belowBatch, prefixLen, broadcastProbe, twoStage, twoStageFloor)
+      belowBatch, broadcastProbe, twoStage, twoStageFloor)
 
   /** [[nearDupCheck]] over an ARBITRARY `(doc_id, s)` probe element
     * relation against an index persisted by [[persistLshIndexElems]]
@@ -982,11 +942,10 @@ object Dedup {
     * two-stage machinery, same tombstone subtraction. */
   def nearDupCheckElems(spark: SparkSession, indexDir: String,
       probeElems: DataFrame, threshold: Double = jaccardThreshold,
-      belowBatch: Long = Long.MaxValue, prefixLen: Int = 2,
-      broadcastProbe: Boolean = true,
+      belowBatch: Long = Long.MaxValue, broadcastProbe: Boolean = true,
       twoStage: Option[Boolean] = Some(false)): DataFrame =
     nearDupCheckElemsWithProbe(spark, indexDir, probeElems, threshold,
-      belowBatch, prefixLen, broadcastProbe, twoStage)._1
+      belowBatch, broadcastProbe, twoStage)._1
 
   /** [[nearDupCheckElems]] plus the pinned probe band rows and their
     * release handle — the ingest-loop form (the multimodal
@@ -995,25 +954,21 @@ object Dedup {
     * discipline). */
   private[graft] def nearDupCheckElemsWithProbe(spark: SparkSession,
       indexDir: String, probeElems: DataFrame, threshold: Double,
-      belowBatch: Long = Long.MaxValue, prefixLen: Int = 2,
-      broadcastProbe: Boolean = true,
+      belowBatch: Long = Long.MaxValue, broadcastProbe: Boolean = true,
       twoStage: Option[Boolean] = Some(false)): (DataFrame, DataFrame, () => Unit) =
     nearDupCheckWithProbeRows(spark, indexDir,
       len => bandRowsOfElems(probeElems, len), threshold, belowBatch,
-      prefixLen, broadcastProbe, twoStage)
+      broadcastProbe, twoStage)
 
   private def nearDupCheckWithProbeRows(spark: SparkSession,
       indexDir: String, probeBandsAt: Int => DataFrame, threshold: Double,
-      belowBatch: Long, prefixLen: Int, broadcastProbe: Boolean,
+      belowBatch: Long, broadcastProbe: Boolean,
       twoStage: Option[Boolean] = Some(false),
       twoStageFloor: Long = twoStageCellRowsFloor): (DataFrame, DataFrame, () => Unit) = {
-    // band the probe at the INDEX's persisted prefixLen — probing at a
-    // caller-supplied mismatch builds sig_p paths that exist for no
-    // cell and silently returns zero candidates (the prefixLen param
-    // is the pre-meta-layout fallback only)
-    val effPrefix = readLshPrefixLen(spark, indexDir).getOrElse(prefixLen)
+    // band the probe at the INDEX's persisted prefixLen: its sig_p is
+    // the cell key a dedupIngest delta append of these rows lands in
     val (probe, release) = Materialize.releasable(
-      probeBandsAt(effPrefix)
+      probeBandsAt(readLshPrefixLen(spark, indexDir))
         .select(col("doc_id").as("probe_id"), col("band_id"), col("sig"),
           col("sig_p"), col("ss").as("pss")))
     def emptyResult = spark.createDataFrame(
@@ -1043,8 +998,8 @@ object Dedup {
     val st = graft.GenLifecycle.resolveOrThrow(spark, indexDir,
       "LSH", "persistLshIndex")
     val baseRoot = lshBase(indexDir, st.gen)
-    val baseLen = readGenPrefixLen(spark, baseRoot).getOrElse(effPrefix)
-    val entries = lshDeltaEntries(spark, indexDir)
+    val baseLen = readGenPrefixLen(spark, baseRoot)
+    val entries = graft.GenManifest.readLedger(spark, indexDir)
     // committed-delta mass per probed cell rides the ledger entries
     // (zero extra reads): _cell_mass only changes at a fold, so an
     // append-heavy stream can fatten probed cells past the crossover
@@ -1061,30 +1016,29 @@ object Dedup {
     // length. prefixesAt caches per length, so the pass is shared
     // with lshCellPaths below, and the metadata cost is one
     // O(fat-cells) file read. Explicit Some(x) skips it.
-    val twoStageEff = twoStage.getOrElse(
-      readGenCellMassFull(spark, baseRoot).exists {
-        case (hottest, tail, truncated) =>
-          if (twoStageFloor < cellMassTailFloor) hottest >= twoStageFloor
-          else {
-            val probed = prefixesAt(baseLen)
-            probed.exists { case (b, p) =>
-              tail.getOrElse(s"band_id=$b/sig_p=$p", 0L) +
-                deltaMassFor(liveDataEntries, b, p) >= twoStageFloor
-            } ||
-              // truncated tail: a probed cell ABSENT from it is unknown
-              // (could be fat, cut off by the cap), not known-thin —
-              // degrade to the layout-level hottest answer rather than
-              // silently forfeiting the two-stage win on exactly the
-              // many-fat-cells layouts truncation happens on
-              (truncated && probed.exists { case (b, p) =>
-                !tail.contains(s"band_id=$b/sig_p=$p")
-              } && hottest >= twoStageFloor)
-          }
-      })
+    val twoStageEff = twoStage.getOrElse {
+      val (hottest, tail, truncated) = readGenCellMassFull(spark, baseRoot)
+      if (twoStageFloor < cellMassTailFloor) hottest >= twoStageFloor
+      else {
+        val probed = prefixesAt(baseLen)
+        probed.exists { case (b, p) =>
+          tail.getOrElse(s"band_id=$b/sig_p=$p", 0L) +
+            deltaMassFor(liveDataEntries, b, p) >= twoStageFloor
+        } ||
+          // truncated tail: a probed cell ABSENT from it is unknown
+          // (could be fat, cut off by the cap), not known-thin —
+          // degrade to the layout-level hottest answer rather than
+          // silently forfeiting the two-stage win on exactly the
+          // many-fat-cells layouts truncation happens on
+          (truncated && probed.exists { case (b, p) =>
+            !tail.contains(s"band_id=$b/sig_p=$p")
+          } && hottest >= twoStageFloor)
+      }
+    }
     lastTwoStageDecisions.put(indexDir, twoStageEff)
     val tomb = lshTombstones(spark, indexDir, entries, st.floor, belowBatch)
     val roots = lshCellPaths(spark, indexDir, st, baseLen, prefixesAt,
-      belowBatch, effPrefix, entries)
+      belowBatch, entries)
     if (roots.isEmpty) return (emptyResult, probe, release)
     def cellFrames: Seq[DataFrame] =
       roots.map { case (srcId, root, paths) =>
@@ -1133,18 +1087,6 @@ object Dedup {
     (out, probe, release)
   }
 
-  /** Driver-side family labeling of one micro-batch's confirmed
-    * near-dup pairs — the batch-local twin of [[connectedComponents]]
-    * (which stays the corpus-scale form): the pair set is bounded by
-    * the batch's own size, so a local union-find labels it for free
-    * where the distributed min-label propagation pays an iteration of
-    * Spark jobs per hop. Semantics identical by construction: each
-    * connected component's MINIMUM doc survives; every other member
-    * is flagged `(doc, component_min, best incident Jaccard)` —
-    * transitive (a~b, b~c puts c in a's family even when a~c itself
-    * is below threshold), order-independent. Jaccards are returned
-    * RAW; display rounding stays in Spark at the caller (the
-    * shortest-decimal-string HALF_UP class of divergence). */
   /** Confirmed-pair count above which the ingest loop falls back to
     * the distributed [[connectedComponents]] instead of collecting
     * pairs to the driver: distinct sigs bound the SURVIVOR collect by
@@ -1157,6 +1099,18 @@ object Dedup {
     * driver. */
   private[graft] val inBatchPairsDriverCap = 1L << 18
 
+  /** Driver-side family labeling of one micro-batch's confirmed
+    * near-dup pairs — the batch-local twin of [[connectedComponents]]
+    * (which stays the corpus-scale form): the pair set is bounded by
+    * the batch's own size, so a local union-find labels it for free
+    * where the distributed min-label propagation pays an iteration of
+    * Spark jobs per hop. Semantics identical by construction: each
+    * connected component's MINIMUM doc survives; every other member
+    * is flagged `(doc, component_min, best incident Jaccard)` —
+    * transitive (a~b, b~c puts c in a's family even when a~c itself
+    * is below threshold), order-independent. Jaccards are returned
+    * RAW; display rounding stays in Spark at the caller (the
+    * shortest-decimal-string HALF_UP class of divergence). */
   private[graft] def inBatchFamilies(
       pairs: Seq[(Long, Long, Double)]): Seq[(Long, Long, Double)] = {
     val parent = scala.collection.mutable.Map.empty[Long, Long]
@@ -1247,11 +1201,11 @@ object Dedup {
     newPrefixLen.foreach(l => require(l >= 1 && l <= 16,
       s"newPrefixLen=$l: must be in [1, 16]"))
     val st = graft.GenManifest.resolve(spark, indexDir).getOrElse(return)
-    val entries = lshDeltaEntries(spark, indexDir).filter(_.id > st.floor)
+    val entries = graft.GenManifest.readLedger(spark, indexDir)
+      .filter(_.id > st.floor)
     val deltas = entries.filterNot(_.tomb).map(_.id).sorted
     val tombIds = entries.filter(_.tomb).map(_.id).sorted
     val curLen = readGenPrefixLen(spark, lshBase(indexDir, st.gen))
-      .orElse(readLshPrefixLen(spark, indexDir)).getOrElse(2)
     val targetLen = newPrefixLen.getOrElse(curLen)
     if (deltas.nonEmpty || tombIds.nonEmpty || targetLen != curLen) {
       // tombstones are APPLIED by the fold (each source's rows minus
@@ -1338,7 +1292,7 @@ object Dedup {
       indexDir: String): DataFrame =
     nearDupCheck(spark, indexDir,
       Tables.table(spark, dir, "documents").filter(col("doc_id") % 2 === 1),
-      prefixLen = 1, broadcastProbe = false)
+      broadcastProbe = false)
       .select(col("probe_id"), col("index_id"),
         graft.QueryDef.roundedRatio(col("n_inter"), col("n_union"), 6).as("jac"))
       .orderBy("probe_id", "index_id")
@@ -1359,16 +1313,6 @@ object Dedup {
       indexDir
     })
 
-  /** Dedup-against-index, oracle-checked end to end: the even-id half
-    * of `documents` is persisted as the LSH index, the odd-id half
-    * probes it, and every confirmed cross-split near-dup pair comes
-    * back with its exact Jaccard. The oracle recomputes the identical
-    * candidates+verify across the same split in SQL.
-    *
-    * TIMING CONTRACT (deliberate): this form rebuilds AND persists the
-    * index inside the measured query, so its bench number is
-    * build+write+serve end to end — the index lifecycle cost. The
-    * serving cost alone is `dedup_against_index_serve_only` below. */
   /** Shared oracle of the odd-probe-vs-even-index family; the
     * takedown variants derive theirs by [[graft.QueryDef
     * .replacedOracle]] on the candidate split's WHERE clause. */
@@ -1384,6 +1328,16 @@ object Dedup {
   // definition — ADVICE r14)
   private[ops] val splitCandAnchor = "WHERE a.doc_id % 2 = 1 AND b.doc_id % 2 = 0"
 
+  /** Dedup-against-index, oracle-checked end to end: the even-id half
+    * of `documents` is persisted as the LSH index, the odd-id half
+    * probes it, and every confirmed cross-split near-dup pair comes
+    * back with its exact Jaccard. The oracle recomputes the identical
+    * candidates+verify across the same split in SQL.
+    *
+    * TIMING CONTRACT (deliberate): this form rebuilds AND persists the
+    * index inside the measured query, so its bench number is
+    * build+write+serve end to end — the index lifecycle cost. The
+    * serving cost alone is `dedup_against_index_serve_only` below. */
   val dedupAgainstIndex = QueryDef(
     "dedup_against_index",
     splitProbeOracle,
@@ -1468,6 +1422,11 @@ object Dedup {
       probeOddAgainstIndex(spark, dir, indexDir)
     })
 
+  /** n-gram Jaccard verification over the LSH candidates: exact shingle
+    * set Jaccard, thresholded — the verify stage of the dedup pipeline.
+    * Runs on candidates only, never all pairs, and per pair as an array
+    * intersection (set sizes are document-bounded), not a shingle-level
+    * join explosion. */
   val dedupJaccardNgram = QueryDef(
     "dedup_jaccard_ngram",
     Some(s"""$jaccardCtes
@@ -1787,22 +1746,6 @@ object Dedup {
         .orderBy("doc_id")
     })
 
-  /** Cross-document repeated-substring detection (the ExactSubstr
-    * shape of Lee et al. 2021, "Deduplicating Training Data Makes
-    * Language Models Better", windowed-hash form): any 8-token span
-    * occurring verbatim in TWO OR MORE distinct documents is a
-    * repeated substring; per doc this reports the repeated-window
-    * count and the number of tokens covered by at least one repeated
-    * span — the inputs a training pipeline uses to CUT those spans
-    * (suffix-array ExactSubstr finds arbitrary-length repeats; the
-    * windowed form finds every repeat of length ≥ k with k-bounded
-    * state, the distributable trade). Scale shape: overlapping
-    * windows are generated map-side (one row per token, ~text-sized),
-    * ONE shuffle on the window hash finds cross-doc repeats
-    * (map-side-combined count-distinct over doc ids), one hash join
-    * back tags each doc's repeated windows, and coverage is a
-    * window→token explode bounded by 8× the repeated-window count —
-    * no pairwise work anywhere, state O(distinct windows). */
   /** Overlapping k-token window relation `(doc_id, i, h)` — one row
     * per window start (1-based), `h` = md5 of the space-joined k-token
     * span. Generated map-side (tokenize + transform, no shuffle).
@@ -1837,6 +1780,22 @@ object Dedup {
     wins.join(rep, "h").select("doc_id", "i").distinct()
   }
 
+  /** Cross-document repeated-substring detection (the ExactSubstr
+    * shape of Lee et al. 2021, "Deduplicating Training Data Makes
+    * Language Models Better", windowed-hash form): any 8-token span
+    * occurring verbatim in TWO OR MORE distinct documents is a
+    * repeated substring; per doc this reports the repeated-window
+    * count and the number of tokens covered by at least one repeated
+    * span — the inputs a training pipeline uses to CUT those spans
+    * (suffix-array ExactSubstr finds arbitrary-length repeats; the
+    * windowed form finds every repeat of length ≥ k with k-bounded
+    * state, the distributable trade). Scale shape: overlapping
+    * windows are generated map-side (one row per token, ~text-sized),
+    * ONE shuffle on the window hash finds cross-doc repeats
+    * (map-side-combined count-distinct over doc ids), one hash join
+    * back tags each doc's repeated windows, and coverage is a
+    * window→token explode bounded by 8× the repeated-window count —
+    * no pairwise work anywhere, state O(distinct windows). */
   val dedupSubstring = QueryDef(
     "dedup_substring",
     Some(s"""WITH w AS (SELECT doc_id, list_filter(string_split(text, ' '), x -> length(x) > 0) AS ws FROM documents),

@@ -54,8 +54,8 @@ object IndexMaintenance {
   /** Decision inputs, all control-plane sized. `maxDrift` is None for
     * index families without a drift concept (LSH) or when there are no
     * deltas to drift on. `staleDeltas` counts deltas whose labels were
-    * assigned against a superseded centroid set (`_gen` below the
-    * manifest's `lgen`): serving full-reads them on every probe, so
+    * assigned against a superseded centroid set (ledger `gen` below
+    * the manifest's `lgen`): serving full-reads them on every probe, so
     * their mere existence justifies a fold regardless of row counts.
     * `medianCellRows` (LSH): the median BASE cell's row mass — the
     * cold-layout signal (a corpus that shrank under retention deletes
@@ -65,26 +65,27 @@ object IndexMaintenance {
     * both — were folded one prefix char shorter (exact for
     * current-length cells, conservatively coarse for stale-length
     * delta cells), so a downward re-bucket can be vetoed before it
-    * recreates the hot cell an earlier tick split. */
-  /** `deltaFiles`: the live delta backlog counted in CELL DIRECTORIES
+    * recreates the hot cell an earlier tick split.
+    *
+    * `deltaFiles`: the live delta backlog counted in CELL DIRECTORIES
     * (Σ ledger cell-list sizes over data deltas, +1 per live
     * tombstone) — the FS-metadata pressure signal. A many-tiny-batches
     * workload pays per-probe listing/footer cost long before row mass
     * justifies a fold (PERF.md r11 names ~250 delta files per ingest
     * batch as the steady-state floor), so row- and batch-count
     * thresholds alone under-fire exactly there. O(1) to compute: the
-    * ledger already carries every cell list. Pre-ledger layouts read
-    * 0 (the signal is ledger-born, like the cell lists themselves). */
-  /** `tombRows`: LIVE tombstone key mass (Σ recorded key counts over
+    * ledger already carries every cell list.
+    *
+    * `tombRows`: LIVE tombstone key mass (Σ recorded key counts over
     * un-retired tombstone deltas) — the probe-tax signal
     * `deltaFiles` cannot see: a tombstone counts ONE file, and its
     * keys are not band/corpus rows, so a single fat takedown (say
     * 10⁶ ids) taxes every probe with a 10⁶-row broadcast anti-join
     * while tripping neither `backlogRatio` nor `maxDeltaFiles`. Key
     * counts ride the delete's own ledger entry (recorded at write —
-    * zero reads here); a pre-r13 tombstone without one falls back to
-    * a footer count of its key list. */
-  /** `cellCount` (IVF): live coarse cells in the base generation — the
+    * zero reads here).
+    *
+    * `cellCount` (IVF): live coarse cells in the base generation — the
     * current k. With `baseRows`/`deltaRows` it yields the POST-FOLD
     * mean cell mass `(baseRows + deltaRows) / cellCount`, the growth
     * signal [[Policy.hotCellMass]] reads (per-cell counts already ride
@@ -192,26 +193,18 @@ object IndexMaintenance {
     * ledger-borne signals share their inputs. Live = above the
     * manifest floor; a tombstone counts ONE file toward the file
     * signal (its single-file key list taxes every probe until the
-    * fold retires it). Tombstone key counts
-    * ride their entries (r13+), so zero data reads; a legacy
-    * tombstone entry without one costs a footer count of its key list
-    * (explicit one-column schema: an empty delete reads as zero keys,
-    * and only the row COUNT is consulted, so the column name choice
-    * is immaterial across families). */
+    * fold retires it). Tombstone key counts ride their entries, so
+    * zero data reads. */
   private def ledgerSignals(spark: SparkSession,
       indexDir: String): (Long, Long) = {
     val floor = graft.GenManifest.resolve(spark, indexDir)
       .map(_.floor).getOrElse(-1L)
     val live = graft.GenManifest.readLedger(spark, indexDir)
-      .getOrElse(Seq.empty).filter(_.id > floor)
-    val files = live
-      .map(e => if (e.tomb) 1L else e.cells.map(_.size.toLong).getOrElse(1L))
-      .sum
-    val tombs = live.filter(_.tomb)
-      .map(e => e.rows.map(_.sum).getOrElse(
-        spark.read.schema(
-            org.apache.spark.sql.types.StructType.fromDDL("doc_id BIGINT"))
-          .parquet(s"$indexDir/delta/t${e.id}").count()))
+      .filter(_.id > floor)
+    val files = live.map(e => if (e.tomb) 1L else e.cells.size.toLong).sum
+    val tombs = live.filter(_.tomb).map(e => e.rows.getOrElse(
+      throw new IllegalStateException(
+        s"$indexDir/delta/ledger: tombstone ${e.id} records no key count")).sum)
       .sum
     (files, tombs)
   }

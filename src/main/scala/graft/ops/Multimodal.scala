@@ -294,23 +294,6 @@ object Multimodal {
         .orderBy("media_type")
     })
 
-  /** NEAR-dup over multimodal payloads — the composition of the
-    * codegen binary parse with the text pipeline's LSH machinery:
-    * each payload's BODY (the bytes after the 29-byte PNG header) is
-    * hex-encoded with builtin binary expressions, sliced into
-    * overlapping 8-byte grams (the binary shingle — ssdeep-style
-    * content n-grams; byte UNIgrams/bigrams are deliberately NOT
-    * used: same-language payloads share those distributions almost
-    * entirely, measured 54k false candidates at sf0.01 vs 26 with
-    * 8-byte grams), and the gram relation rides the EXACT
-    * minhash → band → bucket-join → Jaccard-verify pipeline the text
-    * near-dup uses ([[Dedup.scoredPairsOf]]). Candidate pairs only
-    * ever form inside an LSH band bucket — never all pairs — and the
-    * payload bytes themselves never cross an exchange: the gram
-    * projection is map-side, so shuffles carry (doc_id, 16-char gram)
-    * and signatures only (PlanSpec gates this). The oracle re-runs
-    * the identical pipeline over `hex(encode(text))` — the same bytes
-    * the payload body carries by construction. */
   /** Byte 8-gram element relation `(doc_id, s)` of a binary payload
     * frame — the multimodal analog of the text shingle relation, and
     * the element input the shared LSH machinery
@@ -381,6 +364,23 @@ object Multimodal {
       |          UNION ALL SELECT doc_id, 1, band1 FROM sig),
       |sets AS (SELECT doc_id, list(DISTINCT s) AS ss FROM g GROUP BY doc_id)""".stripMargin
 
+  /** NEAR-dup over multimodal payloads — the composition of the
+    * codegen binary parse with the text pipeline's LSH machinery:
+    * each payload's BODY (the bytes after the 29-byte PNG header) is
+    * hex-encoded with builtin binary expressions, sliced into
+    * overlapping 8-byte grams (the binary shingle — ssdeep-style
+    * content n-grams; byte UNIgrams/bigrams are deliberately NOT
+    * used: same-language payloads share those distributions almost
+    * entirely, measured 54k false candidates at sf0.01 vs 26 with
+    * 8-byte grams), and the gram relation rides the EXACT
+    * minhash → band → bucket-join → Jaccard-verify pipeline the text
+    * near-dup uses ([[Dedup.scoredPairsOf]]). Candidate pairs only
+    * ever form inside an LSH band bucket — never all pairs — and the
+    * payload bytes themselves never cross an exchange: the gram
+    * projection is map-side, so shuffles carry (doc_id, 16-char gram)
+    * and signatures only (PlanSpec gates this). The oracle re-runs
+    * the identical pipeline over `hex(encode(text))` — the same bytes
+    * the payload body carries by construction. */
   val mmNearDup = QueryDef(
     "mm_near_dup",
     Some(s"""$mmGramCtes,

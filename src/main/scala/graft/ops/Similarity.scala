@@ -826,8 +826,7 @@ object Similarity {
       trainPqIters: Int = 0): Unit = {
     val spark = index.centroids.sparkSession
     graft.GenManifest.reset(spark, dir, ivfPrefixes)
-    // empty delta ledger from birth: "ledger absent" then always means
-    // a pre-ledger layout, never a fresh index
+    // empty delta ledger from birth: every reader requires one
     graft.GenManifest.writeLedger(spark, dir, Seq.empty)
     index.centroids.write.mode("overwrite").parquet(gdir(dir, "centroids", 0))
     // fresh identity BEFORE the commit: a rebuilt index re-uses gen 0,
@@ -892,8 +891,7 @@ object Similarity {
   private def nearestLabelsAt(spark: SparkSession, indexDir: String,
       st: graft.GenManifest.State, query: Seq[Float], nprobe: Int): Seq[Long] = {
     val qd = query.map(_.toDouble).toArray
-    centroidRowsCached(spark, indexDir, st).map(_._2)
-      .getOrElse(servingCentroidsAt(spark, indexDir, st).collect()).map { r =>
+    centroidRowsCached(spark, indexDir, st)._2.map { r =>
       val cent = r.getSeq[Double](r.fieldIndex("cent"))
       var d2 = 0.0
       var i = 0
@@ -924,11 +922,10 @@ object Similarity {
     * rebuilt index re-uses gen 0 with different centroids and a
     * gen-keyed cache would silently serve the old coarse quantizer
     * (the prefixLen lesson: identity must be explicit metadata, never
-    * inferred from paths). Pre-`_id` layouts simply don't cache. */
+    * inferred from paths). Every centroid generation carries one:
+    * persist and compaction write it before the manifest commit. */
   private def writeGenId(spark: SparkSession, root: String): Unit =
     graft.GenLifecycle.writeGenId(spark, root)
-  private def readGenId(spark: SparkSession, root: String): Option[String] =
-    graft.GenLifecycle.readGenId(spark, root)
 
   /** Driver-local cache of COLLECTED centroid relations, keyed by
     * (indexDir, gen, identity): a committed generation's
@@ -949,36 +946,33 @@ object Similarity {
 
   private def centroidRowsCached(spark: SparkSession, indexDir: String,
       st: graft.GenManifest.State)
-      : Option[(org.apache.spark.sql.types.StructType, Array[org.apache.spark.sql.Row])] =
-    readGenId(spark, gdir(indexDir, "centroids", st.gen)).map { id =>
-      val got = centroidCache.computeIfAbsent((indexDir, st.gen, id), _ => {
-        val df = servingCentroidsAt(spark, indexDir, st)
-        (df.schema, df.collect())
-      })
-      // evict superseded entries: older generations AND same-gen
-      // entries under a different identity — an in-place rebuild
-      // re-uses gen 0 with a fresh token, and without the same-gen
-      // clause one dead row array would leak per rebuild
-      centroidCache.keySet().removeIf(k =>
-        k._1 == indexDir &&
-          (k._2 < st.gen || (k._2 == st.gen && k._3 != id)))
-      got
-    }
+      : (org.apache.spark.sql.types.StructType, Array[org.apache.spark.sql.Row]) = {
+    val id = graft.GenLifecycle.readGenId(spark, gdir(indexDir, "centroids", st.gen))
+    val got = centroidCache.computeIfAbsent((indexDir, st.gen, id), _ => {
+      val df = servingCentroidsAt(spark, indexDir, st)
+      (df.schema, df.collect())
+    })
+    // evict superseded entries: older generations AND same-gen
+    // entries under a different identity — an in-place rebuild
+    // re-uses gen 0 with a fresh token, and without the same-gen
+    // clause one dead row array would leak per rebuild
+    centroidCache.keySet().removeIf(k =>
+      k._1 == indexDir &&
+        (k._2 < st.gen || (k._2 == st.gen && k._3 != id)))
+    got
+  }
 
   /** [[servingCentroidsAt]] through the generation cache: a
-    * LocalRelation replay of the committed rows when the generation
-    * carries an identity token, the plain parquet read otherwise.
-    * Values are identical by construction (immutable generation +
-    * explicit identity), so callers choose purely on access pattern —
-    * the per-batch/per-probe serving paths use this; one-shot
-    * maintenance reads keep the direct form. */
+    * LocalRelation replay of the committed rows. Values are identical
+    * by construction (immutable generation + explicit identity), so
+    * callers choose purely on access pattern — the per-batch/per-probe
+    * serving paths use this; one-shot maintenance reads keep the
+    * direct form. */
   private[graft] def servingCentroidsCached(spark: SparkSession,
-      indexDir: String, st: graft.GenManifest.State): DataFrame =
-    centroidRowsCached(spark, indexDir, st) match {
-      case Some((schema, rows)) =>
-        spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-      case None => servingCentroidsAt(spark, indexDir, st)
-    }
+      indexDir: String, st: graft.GenManifest.State): DataFrame = {
+    val (schema, rows) = centroidRowsCached(spark, indexDir, st)
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+  }
 
   /** Grow a PERSISTED index in place: the batch is assigned to its
     * nearest existing centroids and written as a label-partitioned
@@ -1018,7 +1012,7 @@ object Similarity {
     * manifest state — the seam that makes the real in-flight-append
     * race constructible in tests: an appender that resolved its
     * manifest BEFORE a concurrent Lloyd compaction committed lands a
-    * delta whose labels (and `_gen` tag) belong to the superseded
+    * delta whose labels (and ledger `gen`) belong to the superseded
     * centroid set; serving and the next compaction recognize the tag
     * and route that delta to the full-read / relabel paths. */
   private[graft] def appendToPersistedIvfIndexAt(spark: SparkSession,
@@ -1034,15 +1028,15 @@ object Similarity {
     // absorbed are trimmed (a racing compaction's floor can only be
     // HIGHER, so trimming by st.floor is conservative; readers filter
     // by their own resolved floor).
-    graft.GenLifecycle.commitDelta(spark, indexDir,
-      allDeltaEntries(spark, indexDir), st.floor, batchId, tomb = false) {
+    graft.GenLifecycle.commitDelta(spark, indexDir, st.floor, batchId,
+        tomb = false) {
       Storage.writeCellClustered(
         assignToCentroids(centroids, newVecs)
           .withColumn("norm", sqrt(dot(col("embedding"), col("embedding"))))
           .select(col("vec_id"), col("label"), col("embedding"), col("norm")),
         Seq("label"), "vec_id", root, maxCellRows)
       val cells = graft.IndexFs.listNames(spark, root, "label=-?\\d+").sorted
-      graft.GenManifest.DeltaEntry(batchId, st.gen, Some(cells))
+      graft.GenManifest.DeltaEntry(batchId, st.gen, cells)
     }
   }
 
@@ -1089,8 +1083,8 @@ object Similarity {
     val st = resolveIvf(spark, indexDir)
     // retract → write → commit (the shared discipline): a concurrent
     // probe never subtracts a half-overwritten key list
-    graft.GenLifecycle.commitDelta(spark, indexDir,
-      allDeltaEntries(spark, indexDir), st.floor, batchId, tomb = true) {
+    graft.GenLifecycle.commitDelta(spark, indexDir, st.floor, batchId,
+        tomb = true) {
       vecIds.select(col("vec_id").cast("long").as("vec_id")).distinct()
         .coalesce(1).write.mode("overwrite")
         .parquet(s"$indexDir/delta/t$batchId")
@@ -1098,7 +1092,7 @@ object Similarity {
       // (footer-cheap; see the LSH twin)
       val n = spark.read.schema(ivfTombReadSchema)
         .parquet(s"$indexDir/delta/t$batchId").count()
-      graft.GenManifest.DeltaEntry(batchId, st.gen, None, tomb = true,
+      graft.GenManifest.DeltaEntry(batchId, st.gen, Nil, tomb = true,
         rows = Some(Seq(n)))
     }
   }
@@ -1123,33 +1117,14 @@ object Similarity {
       .groupBy("t_doc").agg(max(col("t_del")).as("t_del")))
   }
 
-  /** The centroid generation that assigned a delta's labels, if its
-    * sidecar tag landed — PRE-LEDGER layouts only; ledgered layouts
-    * carry the generation in the ledger entry. */
-  private def deltaGen(spark: SparkSession, indexDir: String,
-      id: Long): Option[Long] =
-    graft.GenLifecycle.readMeta(spark, s"$indexDir/delta/b$id", "_gen")
-      .map(_.trim.toLong)
-
-  /** Every committed delta's metadata, floor-unfiltered: ONE ledger
-    * read when the layout is ledgered (all current layouts —
-    * [[persistIvfIndex]] writes an empty ledger from birth); a
-    * pre-ledger layout rebuilds the entries from the directory listing
-    * plus per-delta `_gen` sidecars (labels unknown → readers fall
-    * back to per-cell existence checks). */
-  private def allDeltaEntries(spark: SparkSession,
-      indexDir: String): Seq[graft.GenManifest.DeltaEntry] =
-    graft.GenManifest.readLedger(spark, indexDir).getOrElse(
-      graft.GenManifest.deltaIds(spark, indexDir, above = Long.MinValue).map(id =>
-        graft.GenManifest.DeltaEntry(id,
-          deltaGen(spark, indexDir, id).getOrElse(-1L), None)))
-
-  /** The serving view of the committed deltas — entries above the
-    * resolved manifest's floor, in batch order. O(1) seam calls on a
-    * ledgered layout (IndexFsSpec pins this). */
+  /** The serving view of the committed deltas — the ledger's entries
+    * above the resolved manifest's floor, in batch order. ONE ledger
+    * read ([[persistIvfIndex]] writes an empty ledger from birth), so
+    * O(1) seam calls in the backlog (IndexFsSpec pins this). */
   private def deltaEntriesAbove(spark: SparkSession, indexDir: String,
       st: graft.GenManifest.State): Seq[graft.GenManifest.DeltaEntry] =
-    allDeltaEntries(spark, indexDir).filter(_.id > st.floor).sortBy(_.id)
+    graft.GenManifest.readLedger(spark, indexDir).filter(_.id > st.floor)
+      .sortBy(_.id)
 
   /** Committed deltas above the floor, split into (current-label,
     * stale-label) ids — the maintenance scheduler's view: stale deltas
@@ -1187,9 +1162,9 @@ object Similarity {
     * N+1; labels picked against one generation's centroids must scan
     * that same generation's cells).
     *
-    * A delta whose `_gen` tag predates the live label space (it was
-    * appended against since-re-clustered centroids, or the tag hasn't
-    * landed yet) is read IN FULL instead of label-pruned: its cell
+    * A delta whose ledger `gen` predates the live label space (it was
+    * appended against since-re-clustered centroids) is read IN FULL
+    * instead of label-pruned: its cell
     * layout doesn't correspond to the probed labels, and pruning it
     * would open exactly the recall hole the old "quiesce ingest around
     * Lloyd runs" caveat documented. The extra I/O is one batch-sized
@@ -1227,7 +1202,7 @@ object Similarity {
     * All delta metadata comes from the ledger entries: a current-label
     * delta is pruned to the probed labels it actually WROTE (recorded
     * at ingest — zero per-cell existence checks here), a stale-tagged
-    * or untagged one is read in full (its cell layout indexes a
+    * one is read in full (its cell layout indexes a
     * superseded centroid set — see [[servingCorpusAt]]'s race note). */
   private def servingDeltaFramesAt(spark: SparkSession, indexDir: String,
       st: graft.GenManifest.State, labels: Seq[Long]): Seq[DataFrame] = {
@@ -1248,12 +1223,10 @@ object Similarity {
       val root = s"$indexDir/delta/b${e.id}"
       val raw =
         if (e.gen < st.lgen) Some(readCorpusRoot(spark, root, Seq(root)))
-        else e.cells match {
-          case Some(cs) =>
-            val hit = labels.map(l => s"label=$l").filter(cs.toSet)
-            if (hit.isEmpty) None
-            else Some(readCorpusRoot(spark, root, hit.map(n => s"$root/$n")))
-          case None => prunedCorpusRead(spark, root, labels)
+        else {
+          val hit = labels.map(l => s"label=$l").filter(e.cells.toSet)
+          if (hit.isEmpty) None
+          else Some(readCorpusRoot(spark, root, hit.map(n => s"$root/$n")))
         }
       raw.map(Dedup.minusTombs(_, tomb, e.id, "vec_id"))
     }
@@ -1413,7 +1386,7 @@ object Similarity {
     * folded in against the NEW centroids (bounded second pass over
     * just those deltas); (2) a delta that lands after even that —
     * or whose append resolved the pre-commit manifest — carries a
-    * `_gen` tag below the new label-space generation, and serving
+    * ledger `gen` below the new label-space generation, and serving
     * reads such deltas IN FULL instead of label-pruned
     * ([[servingCorpusAt]]); (3) the next compaction RELABELS any
     * stale-tagged delta against the then-current centroids before
@@ -1631,10 +1604,7 @@ object Similarity {
     * Full-precision I/O therefore equals a plain
     * `nprobe = rerankCells` served probe (OpsSpec asserts the
     * `inputFiles` containment) while the cells are chosen from an
-    * `nprobeWide`-cell sketch net. A pre-sketch index (no `sketch_g`
-    * directory for the live generation) falls back to quantizing the
-    * wide cells' full vectors in flight — correct, without the I/O
-    * saving. The pool/cell choice is a control-plane collect of
+    * `nprobeWide`-cell sketch net. The pool/cell choice is a control-plane collect of
     * ≤ rerankCells rows, the serving-router pattern of
     * [[nearestLabels]]. */
   def ivfProbeVectorRerankedServed(spark: SparkSession, indexDir: String,
@@ -1649,8 +1619,8 @@ object Similarity {
       .withColumn("qnorm", sqrt(dot(col("qe"), col("qe"))))
       .withColumn("qamax", amaxCol(col("qe")))
       .withColumn("q8q", q8Col(col("qe"), col("qamax")))
-    // base (persisted sketch cells or the legacy in-flight fallback)
-    // plus delta sketches, tombstone-subtracted — the shared stage-1
+    // base (persisted sketch cells) plus delta sketches,
+    // tombstone-subtracted — the shared stage-1
     // builder the batched scaffold uses too
     val sketches = sketchFramesAt(spark, indexDir, st, wide)
     val cells: Seq[Long] =
@@ -1675,27 +1645,30 @@ object Similarity {
   private val pqReadSchema = org.apache.spark.sql.types.StructType.fromDDL(
     "vec_id BIGINT, pqc ARRAY<INT>, label BIGINT")
 
-  /** The live generation's persisted PQ-code cells for a set of probed
-    * labels; a pre-PQ layout (no `pq_g` for the live generation) falls
-    * back to encoding the full base cells in flight against the live
-    * codebook — correct, without the bytes saving. */
+  /** The live generation's persisted PQ-code cells (`pq_g`, written
+    * by persist and every compaction before the manifest commit) for a
+    * set of probed labels, tombstone-subtracted. */
   private def pqBaseFrame(spark: SparkSession, indexDir: String,
       st: graft.GenManifest.State, labels: Seq[Long],
-      cb: DataFrame, tomb: Option[DataFrame]): Option[DataFrame] = {
-    val pqRoot = gdir(indexDir, "pq", st.gen)
-    val raw =
-      if (graft.IndexFs.isDir(spark, pqRoot)) {
-        val paths = labels.map(l => s"$pqRoot/label=$l")
-          .filter(p => graft.IndexFs.isDir(spark, p))
-        if (paths.isEmpty) None
-        else Some(graft.IndexFs.withCellListing(spark) {
-          spark.read.schema(pqReadSchema)
-            .option("basePath", pqRoot).parquet(paths: _*)
-        })
-      } else
-        prunedCorpusRead(spark, gdir(indexDir, "corpus", st.gen), labels)
-          .map(pqCodesOfCb(_, cb))
-    raw.map(Dedup.minusTombs(_, tomb, st.floor, "vec_id"))
+      tomb: Option[DataFrame]): Option[DataFrame] =
+    codecCellRead(spark, gdir(indexDir, "pq", st.gen), labels, pqReadSchema)
+      .map(Dedup.minusTombs(_, tomb, st.floor, "vec_id"))
+
+  /** The probed label cells of a persisted codec generation
+    * (`sketch_g`/`pq_g`) — None when no probed label has a cell. The
+    * generation directory itself is required: its absence means the
+    * layout lost a committed codec, which fails loudly. */
+  private def codecCellRead(spark: SparkSession, root: String,
+      labels: Seq[Long], schema: org.apache.spark.sql.types.StructType)
+      : Option[DataFrame] = {
+    if (!graft.IndexFs.isDir(spark, root))
+      throw new IllegalStateException(s"missing $root: the live generation's codec cells")
+    val paths = labels.map(l => s"$root/label=$l")
+      .filter(p => graft.IndexFs.isDir(spark, p))
+    if (paths.isEmpty) None
+    else Some(graft.IndexFs.withCellListing(spark) {
+      spark.read.schema(schema).option("basePath", root).parquet(paths: _*)
+    })
   }
 
   /** [[ivfProbeVectorRerankedServed]] with the PQ codec in stage 1:
@@ -1707,8 +1680,7 @@ object Similarity {
     * cells, so full-precision I/O again equals a plain
     * `nprobe = rerankCells` probe. Delta rows are scored exactly in
     * stage 1 (see the inline note — avoids the PQ out-of-vocabulary
-    * freshness hole); pre-PQ layouts encode the base cells in flight
-    * against the live codebook. Persisted codes were written against
+    * freshness hole). Persisted codes were written against
     * their OWN generation's centroids, which are the live ones by
     * construction: a codebook change is a compaction, and compaction
     * rewrites `pq_g` with the new generation. */
@@ -1729,7 +1701,7 @@ object Similarity {
       .select("qe", "qnorm", "lut")
     val entries = deltaEntriesAbove(spark, indexDir, st)
     val tomb = ivfTombstones(spark, indexDir, entries)
-    val baseAp = pqBaseFrame(spark, indexDir, st, wide, cb, tomb).map(df =>
+    val baseAp = pqBaseFrame(spark, indexDir, st, wide, tomb).map(df =>
       dropExcluded(df)
       .crossJoin(broadcast(q.select("lut", "qnorm")))
       .select(col("vec_id"), col("label"), approxCosPq.as("ap")))
@@ -1764,26 +1736,15 @@ object Similarity {
   }
 
   /** Stage-1 sketch relations for a set of probed labels: the
-    * persisted `sketch_g` cells of the live generation (legacy
-    * layouts fall back to quantizing the full base cells in flight)
-    * plus on-the-fly sketches of committed delta rows. */
+    * persisted `sketch_g` cells of the live generation (written by
+    * persist and every compaction before the manifest commit) plus
+    * on-the-fly sketches of committed delta rows. */
   private def sketchFramesAt(spark: SparkSession, indexDir: String,
       st: graft.GenManifest.State, labels: Seq[Long]): Seq[DataFrame] = {
     val entries = deltaEntriesAbove(spark, indexDir, st)
     val tomb = ivfTombstones(spark, indexDir, entries)
-    val sketchRoot = gdir(indexDir, "sketch", st.gen)
-    val base =
-      if (graft.IndexFs.isDir(spark, sketchRoot)) {
-        val paths = labels.map(l => s"$sketchRoot/label=$l")
-          .filter(p => graft.IndexFs.isDir(spark, p))
-        if (paths.isEmpty) None
-        else Some(graft.IndexFs.withCellListing(spark) {
-          spark.read.schema(sketchReadSchema)
-            .option("basePath", sketchRoot).parquet(paths: _*)
-        })
-      } else
-        prunedCorpusRead(spark, gdir(indexDir, "corpus", st.gen), labels)
-          .map(sketchOf)
+    val base = codecCellRead(spark, gdir(indexDir, "sketch", st.gen), labels,
+      sketchReadSchema)
     // tombstones apply to stage 1 too — a deleted vector must not
     // hold a candidate-pool slot (the exact stage would drop it from
     // the OUTPUT either way, but it could displace a live hit)
@@ -1850,7 +1811,7 @@ object Similarity {
         val qlut = qrel.select("query_id", "qe", "qnorm")
           .crossJoin(broadcast(cb))
           .select(col("query_id"), pqLutCol(col("qe")).as("lut"), col("qnorm"))
-        val baseAp = pqBaseFrame(spark, indexDir, st, touched, cb, tomb).map(df =>
+        val baseAp = pqBaseFrame(spark, indexDir, st, touched, tomb).map(df =>
           df.join(broadcast(probes.select("query_id", "label")), Seq("label"))
             .join(broadcast(qlut), Seq("query_id"))
             .select(col("query_id"), col("vec_id"), col("label"),

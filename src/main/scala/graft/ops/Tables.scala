@@ -154,14 +154,6 @@ object Tables {
   /** The raw `ts` forms the adaptive [[events]] loader accepts. */
   private val adaptiveTsTypes = Set("bigint", "timestamp", "timestamp_ntz")
 
-  /** Fail-fast schema tripwire: every driver table must load AND match
-    * the pinned column:type contract exactly (names, order, types),
-    * and `events.ts` must normalize to a session-TZ timestamp through
-    * [[events]]. Throws ONE message naming the file, the column and
-    * the observed type instead of letting a testdata layout drift
-    * surface as dozens of identical analysis errors downstream (which
-    * is exactly how round 5 lost 34 queries).
-    */
   /** First line of an exception's message, null/empty-safe — the
     * tripwire's one-line diagnosis must survive causes with no message
     * (a bare EOFException from a truncated footer would otherwise NPE
@@ -170,6 +162,14 @@ object Tables {
     Option(e.getMessage).flatMap(_.linesIterator.nextOption())
       .getOrElse(e.toString)
 
+  /** Fail-fast schema tripwire: every driver table must load AND match
+    * the pinned column:type contract exactly (names, order, types),
+    * and `events.ts` must normalize to a session-TZ timestamp through
+    * [[events]]. Throws ONE message naming the file, the column and
+    * the observed type instead of letting a testdata layout drift
+    * surface as dozens of identical analysis errors downstream (which
+    * is exactly how round 5 lost 34 queries).
+    */
   def sanityCheck(spark: SparkSession, sfDir: String): Unit = {
     // events first: its loader pins the session scan flags (NTZ
     // inference off) that the timestamp expectations below assume

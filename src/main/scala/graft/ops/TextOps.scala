@@ -342,21 +342,6 @@ object TextOps {
         .orderBy("doc_id")
     })
 
-  /** Linear bag-of-words quality scorer — the fastText-classifier
-    * quality gate of the public corpus pipelines (CCNet / LLaMA data
-    * prep score documents with a linear text classifier and keep by
-    * threshold), re-expressed model-as-data: the trained weights ARE a
-    * relation, shipped as a broadcast join, so scoring any corpus is
-    * one map-side join + one per-doc aggregate — no UDF, no per-row
-    * model object, and a retrained model is a data swap, not a code
-    * deploy. Exactness: weights are DECIMAL(6,3) so the per-doc sum is
-    * exact; the keep gate multiplies the σ(x)>σ(bias) test out to
-    * `raw · 200 > n_tokens` (avg weight > 0.005) on exact decimal ×
-    * integer, so both engines agree without evaluating a sigmoid; the
-    * reported score divides only at the end (double ÷ int, rounded).
-    * At 100 TB: the weight table is KBs forever (vocab-bounded), the
-    * only shuffle is the per-doc groupBy, which an upstream
-    * tokenize-stage partitioning by doc_id would eliminate. */
   /** The trained model: token → weight, 3 dp. SINGLE source for the
     * batch broadcast-join query, its DuckDB oracle VALUES list, and
     * the row-local streaming gate [[modelKeepExpr]] — a retrained
@@ -392,6 +377,21 @@ object TextOps {
     when(size(ws) > 0, raw * 200 > size(ws))
   }
 
+  /** Linear bag-of-words quality scorer — the fastText-classifier
+    * quality gate of the public corpus pipelines (CCNet / LLaMA data
+    * prep score documents with a linear text classifier and keep by
+    * threshold), re-expressed model-as-data: the trained weights ARE a
+    * relation, shipped as a broadcast join, so scoring any corpus is
+    * one map-side join + one per-doc aggregate — no UDF, no per-row
+    * model object, and a retrained model is a data swap, not a code
+    * deploy. Exactness: weights are DECIMAL(6,3) so the per-doc sum is
+    * exact; the keep gate multiplies the σ(x)>σ(bias) test out to
+    * `raw · 200 > n_tokens` (avg weight > 0.005) on exact decimal ×
+    * integer, so both engines agree without evaluating a sigmoid; the
+    * reported score divides only at the end (double ÷ int, rounded).
+    * At 100 TB: the weight table is KBs forever (vocab-bounded), the
+    * only shuffle is the per-doc groupBy, which an upstream
+    * tokenize-stage partitioning by doc_id would eliminate. */
   val textQualityModel = QueryDef(
     "text_quality_model",
     Some(s"""WITH tok AS (

@@ -93,9 +93,9 @@ object ExactlyOnceSink {
     * the result is an empty zero-column frame. Committed batches read
     * under the sink's recorded `_schema.ddl` sidecar — NEVER inferred:
     * empty batches commit only a `_SUCCESS` marker, and inference over
-    * file-less directories throws instead of contributing zero rows
-    * (a legacy outDir without the sidecar falls back to inference,
-    * which worked exactly when every batch had data). */
+    * file-less directories throws instead of contributing zero rows.
+    * [[commit]] writes the sidecar before its first batch, so an outDir
+    * with committed batches but no sidecar fails loudly. */
   def readCommitted(spark: org.apache.spark.sql.SparkSession, outDir: String): DataFrame = {
     val committed = graft.GenLifecycle.versionIds(spark, outDir,
         "batch=", gated = false)
@@ -103,12 +103,12 @@ object ExactlyOnceSink {
     if (committed.isEmpty) spark.emptyDataFrame
     else {
       val ddl = s"$outDir/_schema.ddl"
-      val reader =
-        if (graft.IndexFs.exists(spark, ddl))
-          spark.read.schema(org.apache.spark.sql.types.StructType.fromDDL(
-            graft.IndexFs.readUtf8(spark, ddl)))
-        else spark.read
-      reader.parquet(committed: _*)
+      if (!graft.IndexFs.exists(spark, ddl))
+        throw new IllegalStateException(
+          s"missing $ddl: $outDir holds committed batches but no recorded sink schema")
+      spark.read.schema(org.apache.spark.sql.types.StructType.fromDDL(
+          graft.IndexFs.readUtf8(spark, ddl)))
+        .parquet(committed: _*)
     }
   }
 }

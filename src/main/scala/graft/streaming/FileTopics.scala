@@ -53,23 +53,19 @@ object FileTopics {
   private def topicExists(spark: SparkSession, brokerDir: String, topic: String): Boolean =
     graft.IndexFs.isDir(spark, topicDir(brokerDir, topic))
 
-  /** Next offset to be assigned per partition (= Kafka's log-end
-    * offset). Missing partitions are implicitly at 0. Served from the
-    * producer-maintained sidecar ledger when present (O(1), the
-    * broker's index analog) — scanning the whole log per produce
-    * would make cumulative producer I/O quadratic in topic size.
-    * Falls back to a log scan for topics written before the ledger
-    * existed. */
-  def endOffsets(spark: SparkSession, brokerDir: String, topic: String): Map[Int, Long] =
-    readLedger(spark, brokerDir, topic).map(_.cur)
-      .getOrElse(scanEndOffsets(spark, brokerDir, topic))
+  /** Partitions per topic. Records route by `hash(key) % nPartitions`,
+    * which fixes per-key order across produces — a property of the
+    * topic's layout, never a per-call choice. */
+  val nPartitions = 4
 
-  private def scanEndOffsets(spark: SparkSession, brokerDir: String,
-      topic: String): Map[Int, Long] =
-    if (!topicExists(spark, brokerDir, topic)) Map.empty
-    else spark.read.schema(recordSchema).parquet(topicDir(brokerDir, topic))
-      .groupBy("partition").agg(max("offset").as("m"))
-      .collect().map(r => r.getInt(0) -> (r.getLong(1) + 1)).toMap
+  /** Next offset to be assigned per partition (= Kafka's log-end
+    * offset), served from the producer-maintained `_offsets.json`
+    * ledger (O(1), the broker's index analog) — scanning the whole log
+    * per produce would make cumulative producer I/O quadratic in topic
+    * size. Missing partitions are implicitly at 0; a topic nothing was
+    * produced to reads as empty. */
+  def endOffsets(spark: SparkSession, brokerDir: String, topic: String): Map[Int, Long] =
+    readLedger(spark, brokerDir, topic).map(_.cur).getOrElse(Map.empty)
 
   private def ledgerPath(brokerDir: String, topic: String): String =
     s"${topicDir(brokerDir, topic)}/_offsets.json"
@@ -86,27 +82,31 @@ object FileTopics {
       .map { kv => val Array(p, o) = kv.split(":"); p.toInt -> o.toLong }
       .toMap
 
-  /** The sidecar is a tiny text record, swapped atomically
-    * ([[graft.IndexFs.writeUtf8Atomic]] — fsync'd tmp + atomic rename)
-    * by the single writer after each append. V1 files (one `p:o,...`
-    * line) parse as cur-only. */
+  /** The sidecar is a tiny text record (`batch=`, `pre=`, `cur=`
+    * lines), swapped atomically ([[graft.IndexFs.writeUtf8Atomic]] —
+    * fsync'd tmp + atomic rename) by the single writer after each
+    * append. None = nothing was ever produced to the topic. The
+    * producer commits a ledger before its first append, so a topic
+    * holding `partition=` data without one has lost its commit record
+    * and fails loudly instead of reading as empty. */
   private[streaming] def readLedger(spark: SparkSession, brokerDir: String,
       topic: String): Option[Ledger] = {
     val path = ledgerPath(brokerDir, topic)
-    if (!graft.IndexFs.exists(spark, path)) None
-    else {
+    if (!graft.IndexFs.exists(spark, path)) {
+      if (graft.IndexFs.listNames(spark, topicDir(brokerDir, topic),
+          "partition=.*").nonEmpty)
+        throw new IllegalStateException(
+          s"missing $path: topic $topic holds partition data but no offset ledger")
+      None
+    } else {
       val lines = graft.IndexFs.readUtf8(spark, path)
         .linesIterator.filter(_.nonEmpty).toSeq
-      if (!lines.exists(_.startsWith("cur=")))
-        Some(Ledger(None, Map.empty, parseOffsets(lines.mkString(","))))
-      else {
-        def field(k: String): Option[String] =
-          lines.find(_.startsWith(s"$k=")).map(_.drop(k.length + 1))
-        Some(Ledger(
-          field("batch").map(_.toLong),
-          field("pre").map(parseOffsets).getOrElse(Map.empty),
-          field("cur").map(parseOffsets).getOrElse(Map.empty)))
-      }
+      def field(k: String): Option[String] =
+        lines.find(_.startsWith(s"$k=")).map(_.drop(k.length + 1))
+      Some(Ledger(
+        field("batch").map(_.toLong),
+        field("pre").map(parseOffsets).getOrElse(Map.empty),
+        field("cur").map(parseOffsets).getOrElse(Map.empty)))
     }
   }
 
@@ -125,13 +125,6 @@ object FileTopics {
     graft.IndexFs.writeUtf8Atomic(spark, ledgerPath(brokerDir, topic), body)
   }
 
-  /** Producer — the dynamic-topic form (`MyKafkaUtils.java:31-40` +
-    * `BaseDbApp.java:83-89`): `frame` carries the sink-frame contract
-    * columns (topic, key, value) built by [[StreamOps.toKafkaShape]];
-    * each row is appended to its topic, partitioned by key hash, with
-    * dense per-partition offsets continuing from the topic's current
-    * end. Intra-batch order per partition is (key, value) — a
-    * deterministic stand-in for producer send order. */
   /** Torn-produce recovery: delete files whose offsets lie at or
     * beyond the committed cut. A produce that crashed between the
     * parquet append and the ledger swap left files with offsets >= the
@@ -141,8 +134,7 @@ object FileTopics {
     * file-level deletion of the overshoot is safe. A partition ABSENT
     * from the cut map is at offset 0 — every file in it is
     * uncommitted (this is what makes a torn FIRST produce healable:
-    * [[produce]] commits an empty/scanned ledger before its first
-    * append). (Remaining window, stated precisely: a consumer that
+    * [[produce]] commits an empty ledger before its first append). (Remaining window, stated precisely: a consumer that
     * read a torn file BEFORE the producer restarted saw uncommitted
     * records — the read_uncommitted face of Kafka; transactional
     * read_committed would need consumers to gate on the ledger, which
@@ -162,7 +154,15 @@ object FileTopics {
     }
   }
 
-  /** Produce a frame of `(topic, key, value)` rows. `batchId` is the
+  /** Producer — the dynamic-topic form (`MyKafkaUtils.java:31-40` +
+    * `BaseDbApp.java:83-89`): `frame` carries the sink-frame contract
+    * columns (topic, key, value) built by [[StreamOps.toKafkaShape]];
+    * each row is appended to its topic, partitioned by key hash over
+    * [[nPartitions]], with dense per-partition offsets continuing from
+    * the topic's current end. Intra-batch order per partition is
+    * (key, value) — a deterministic stand-in for producer send order.
+    *
+    * `batchId` is the
     * streaming micro-batch id when called from `foreachBatch` — with
     * it the producer is EXACTLY-ONCE under replay: the ledger records
     * the last absorbed batchId and the pre-batch offsets, so a
@@ -171,20 +171,20 @@ object FileTopics {
     * instead of duplicating the records after them. Without a batchId
     * (ad-hoc/batch callers) the append is at-least-once under caller
     * retries, exactly like a non-transactional Kafka producer. */
-  def produce(frame: DataFrame, brokerDir: String, nPartitions: Int = 4,
+  def produce(frame: DataFrame, brokerDir: String,
       batchId: Option[Long] = None): Unit = {
     val spark = frame.sparkSession
     import spark.implicits._
     val topics = frame.select("topic").distinct().as[String].collect().sorted
     for (t <- topics) {
       // a ledger ALWAYS exists before any append this producer makes:
-      // the first call to a fresh (or pre-ledger legacy) topic commits
-      // the current log state first, so a crash between any append and
-      // its ledger swap is healable on replay (nothing else
-      // distinguishes committed files from torn ones)
+      // the first call to a fresh topic commits an empty ledger first,
+      // so a crash between any append and its ledger swap is healable
+      // on replay (nothing else distinguishes committed files from
+      // torn ones)
       val ledger = readLedger(spark, brokerDir, t).getOrElse {
         graft.IndexFs.mkdirs(spark, topicDir(brokerDir, t))
-        val l = Ledger(None, Map.empty, scanEndOffsets(spark, brokerDir, t))
+        val l = Ledger(None, Map.empty, Map.empty)
         writeLedger(spark, brokerDir, t, l)
         l
       }

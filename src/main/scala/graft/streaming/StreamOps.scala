@@ -754,16 +754,16 @@ object StreamOps {
       stateDir: String): Option[DataFrame] =
     rawDimState(spark, stateDir).map(_.filter(col("op") =!= "delete"))
 
-  /** K2 shape — the per-row-topic Kafka producer contract: Spark's
-    * kafka sink routes on a `topic` column; this builds that frame.
-    * The JSON envelope carries the event time so a downstream layer
-    * can re-window (the reference's layers pass `ts` through every
-    * Kafka hop). */
   /** Timestamp pattern for the envelope: micros precision, so a topic
     * hop is lossless for this engine's microsecond event times (the
     * to_json default truncates to millis). */
   private val envelopeTsFormat = "yyyy-MM-dd HH:mm:ss.SSSSSS"
 
+  /** K2 shape — the per-row-topic Kafka producer contract: Spark's
+    * kafka sink routes on a `topic` column; this builds that frame.
+    * The JSON envelope carries the event time so a downstream layer
+    * can re-window (the reference's layers pass `ts` through every
+    * Kafka hop). */
   def toKafkaShape(routed: DataFrame): DataFrame =
     routed.select(
       col("sink_table").as("topic"),
@@ -1007,18 +1007,6 @@ object StreamOps {
     } finally { probes.unpersist(); () }
   }
 
-  /** Streaming index growth — the ingest side of the ANN loop: each
-    * micro-batch of `(vec_id, embedding)` vectors is assigned to its
-    * nearest centroids and appended as a label-partitioned delta under
-    * the persisted index ([[graft.ops.Similarity
-    * .appendToPersistedIvfIndex]]). A replayed micro-batch OVERWRITES
-    * its own `delta/b<batchId>` directory, so the index never
-    * double-counts; serving ([[annServe]] /
-    * `ivfProbeVectorServed`) picks appended vectors up on its next
-    * probe with no coordination — both sides list base + committed
-    * deltas per probed cell. Compaction
-    * (`Similarity.compactIvfIndex`) folds deltas into the base
-    * offline. */
   /** [[annServe]]'s RE-RANKED mode: each micro-batch of queries is
     * served through the two-stage probe — per-query cells chosen from
     * an `nprobeWide` stage-1 net, exact cosine only in each query's
@@ -1056,6 +1044,18 @@ object StreamOps {
     finally release()
   }
 
+  /** Streaming index growth — the ingest side of the ANN loop: each
+    * micro-batch of `(vec_id, embedding)` vectors is assigned to its
+    * nearest centroids and appended as a label-partitioned delta under
+    * the persisted index ([[graft.ops.Similarity
+    * .appendToPersistedIvfIndex]]). A replayed micro-batch OVERWRITES
+    * its own `delta/b<batchId>` directory, so the index never
+    * double-counts; serving ([[annServe]] /
+    * `ivfProbeVectorServed`) picks appended vectors up on its next
+    * probe with no coordination — both sides list base + committed
+    * deltas per probed cell. Compaction
+    * (`Similarity.compactIvfIndex`) folds deltas into the base
+    * offline. */
   def annIngest(vectors: DataFrame, indexDir: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
     vectors.writeStream.outputMode("append").foreachBatch {
       (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
@@ -1171,7 +1171,7 @@ object StreamOps {
       md5(concat_ws(" ", array_sort(array_distinct(split(col("text"), " "))))),
       uniq => graft.ops.Dedup.nearDupCheckWithProbe(
         batch.sparkSession, indexDir, uniq, threshold,
-        belowBatch = batchId, prefixLen = 2, broadcastProbe = true,
+        belowBatch = batchId, broadcastProbe = true,
         exactFallback = true, twoStage = twoStageProbe,
         twoStageFloor = twoStageFloor),
       threshold, pairsDriverCap)
@@ -1457,7 +1457,7 @@ object StreamOps {
       uniq => graft.ops.Dedup.nearDupCheckElemsWithProbe(
         batch.sparkSession, indexDir,
         graft.ops.Multimodal.payloadGrams(uniq), threshold,
-        belowBatch = batchId, prefixLen = 2, broadcastProbe = true,
+        belowBatch = batchId, broadcastProbe = true,
         twoStage = None),
       threshold, pairsDriverCap)
 

@@ -24,12 +24,11 @@ import org.apache.spark.sql.functions._
 object TopicTransport {
 
   val ConfKey = "graft.topic.transport"
-  val EnvKey = "GRAFT_TOPIC_TRANSPORT"
 
   /** `file` | `kafka` for this session. */
   def mode(spark: SparkSession): String =
     spark.conf.getOption(ConfKey)
-      .orElse(sys.env.get(EnvKey))
+      .orElse(sys.env.get("GRAFT_TOPIC_TRANSPORT"))
       .getOrElse("file")
 
   /** A declarative source/sink configuration — what `readStream`/

@@ -234,4 +234,46 @@ class IndexFsSpec extends SparkSuite {
       "the raised listing threshold leaked into the session")
     assert(!spark.conf.getAll.contains(key), "the threshold is left set after both probes")
   }
+
+  test("a committed layout missing its metadata file fails loudly, naming the file") {
+    import graft.ops.{Dedup, Similarity}
+    import graft.streaming.{ExactlyOnceSink, FileTopics}
+    def failsNaming(file: String)(body: => Any): Unit = {
+      val e = intercept[IllegalStateException](body)
+      assert(e.getMessage.contains(file), e.getMessage)
+    }
+    // a topic whose partition data outlived its offset ledger
+    val broker = uriDir("loud-topic")
+    val rows = Seq(("t", "k1", "v1"), ("t", "k2", "v2")).toDF("topic", "key", "value")
+    FileTopics.produce(rows, broker)
+    IndexFs.delete(spark, s"$broker/t/_offsets.json")
+    failsNaming("t/_offsets.json")(FileTopics.produce(rows, broker))
+
+    // a sink with a committed batch but no recorded schema
+    val out = uriDir("loud-sink") + "/out"
+    ExactlyOnceSink.commit(Seq((1L, "a")).toDF("id", "v"), out, 0L)
+    IndexFs.delete(spark, s"$out/_schema.ddl")
+    failsNaming("out/_schema.ddl")(ExactlyOnceSink.readCommitted(spark, out))
+
+    // an LSH index without its persisted prefix length
+    val lshDir = uriDir("loud-lsh")
+    val docs = Seq(1L -> "alpha beta gamma delta epsilon zeta eta theta")
+      .toDF("doc_id", "text")
+    Dedup.persistLshIndex(docs, lshDir)
+    IndexFs.delete(spark, s"$lshDir/lsh_meta")
+    failsNaming("lsh_meta")(Dedup.nearDupCheck(spark, lshDir, docs).collect())
+
+    // an IVF index without its live sketch cells, then without its ledger
+    val ivfDir = uriDir("loud-ivf")
+    def oneHot(d: Int): Seq[Float] = Seq.tabulate(8)(i => if (i == d) 1f else 0f)
+    Similarity.persistIvfIndex(Similarity.buildIvfIndexFrom(
+      (0 until 8).map(i => (i.toLong, oneHot(i % 2), i % 2))
+        .toDF("vec_id", "embedding", "label")), ivfDir)
+    IndexFs.delete(spark, s"$ivfDir/sketch_g0")
+    failsNaming("sketch_g0")(
+      Similarity.ivfProbeVectorRerankedServed(spark, ivfDir, oneHot(0)).collect())
+    IndexFs.delete(spark, s"$ivfDir/delta/ledger")
+    failsNaming("delta/ledger")(
+      Similarity.ivfProbeVectorServed(spark, ivfDir, oneHot(0)).collect())
+  }
 }

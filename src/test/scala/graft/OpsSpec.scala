@@ -540,17 +540,6 @@ class OpsSpec extends SparkSuite {
       Dedup.persistLshIndex(docs, indexDir, prefixLen = 0)
     }
     assert(e.getMessage.contains("prefixLen"))
-    // on a meta-carrying index the probe RESOLVES the persisted
-    // prefixLen, so even a nonsense caller value is harmless (the
-    // require still guards writers and pre-meta probes). seeded/"nu"
-    // is the band-0-preserving pair used across the LSH specs.
-    val seeded = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"
-    Dedup.persistLshIndex(Seq(1L -> seeded).toDF("doc_id", "text"),
-      indexDir, prefixLen = 1)
-    val probe = Seq(11L -> seeded.replace(" mu", " nu")).toDF("doc_id", "text")
-    val hits = Dedup.nearDupCheck(spark, indexDir, probe, prefixLen = 0)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(hits === Seq((11L, 1L)))
   }
 
   test("hot-cell re-bucketing: longer prefix, identical pairs, stale-length deltas stay probed") {
@@ -609,18 +598,18 @@ class OpsSpec extends SparkSuite {
     import graft.ops.Dedup
     val indexDir = java.nio.file.Files.createTempDirectory("lsh-meta").toString
     val seeded = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"
-    // persist at prefixLen=1; probe and append at the DEFAULT (2) —
-    // without the persisted meta both would band against sig_p paths
-    // that exist for no cell and silently see/contribute nothing
+    // persist at prefixLen=1; probe and append take no length — they
+    // read the persisted one, so neither can band against sig_p paths
+    // that exist for no cell
     Dedup.persistLshIndex(Seq(1L -> seeded).toDF("doc_id", "text"),
       indexDir, prefixLen = 1)
     val probe = Seq(11L -> seeded.replace(" mu", " nu")).toDF("doc_id", "text")
     def pairs(): Seq[(Long, Long)] =
-      Dedup.nearDupCheck(spark, indexDir, probe) // default prefixLen=2
+      Dedup.nearDupCheck(spark, indexDir, probe)
         .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     assert(pairs() === Seq((11L, 1L)),
       "probe did not resolve the index's persisted prefixLen")
-    Dedup.appendToLshIndex(spark, indexDir, // default prefixLen=2
+    Dedup.appendToLshIndex(spark, indexDir,
       Seq(4L -> seeded.replace(" mu", " xi")).toDF("doc_id", "text"),
       batchId = 1L)
     assert(pairs() === Seq((11L, 1L), (11L, 4L)),
@@ -643,12 +632,12 @@ class OpsSpec extends SparkSuite {
     // delta read path both participate in the equality claim
     Dedup.appendToLshIndex(spark, indexDir,
       Seq(900001L -> "tiny doc").toDF("doc_id", "text"),
-      batchId = 1L, prefixLen = 1, exactFallback = true)
+      batchId = 1L, exactFallback = true)
     val probe = Tables.table(spark, dir, "documents")
       .filter(col("doc_id") % 2 === 1).select("doc_id", "text")
       .unionByName(Seq(900011L -> "tiny doc").toDF("doc_id", "text"))
     def run(twoStage: Boolean): Seq[(Long, Long, Double)] =
-      Dedup.nearDupCheck(spark, indexDir, probe, prefixLen = 1,
+      Dedup.nearDupCheck(spark, indexDir, probe,
         exactFallback = true, twoStage = twoStage)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
         .sortBy(t => (t._1, t._2)).toSeq
@@ -1463,7 +1452,7 @@ class OpsSpec extends SparkSuite {
     def probeDecision(text: String): Boolean = {
       val (out, _, release) = Dedup.nearDupCheckWithProbe(spark, fatDir,
         Seq(990001L -> text).toDF("doc_id", "text"), threshold = 0.4,
-        belowBatch = Long.MaxValue, prefixLen = 2, broadcastProbe = true,
+        belowBatch = Long.MaxValue, broadcastProbe = true,
         exactFallback = false, twoStage = None, twoStageFloor = 1100L)
       out.collect()
       release()
@@ -1533,7 +1522,7 @@ class OpsSpec extends SparkSuite {
     // commit artifact landed (the writer orders _SUCCESS before the
     // ledger entry, so a crash leaves at most the data files)
     GenManifest.writeLedger(spark, indexDir,
-      GenManifest.readLedger(spark, indexDir).get.filterNot(_.id == 1L))
+      GenManifest.readLedger(spark, indexDir).filterNot(_.id == 1L))
     assert(new java.io.File(s"$indexDir/delta/b1/_SUCCESS").delete())
 
     def topHit(): (Long, Double) =
@@ -1682,7 +1671,7 @@ class OpsSpec extends SparkSuite {
 
     // a TORN delete (data landed, ledger entry retracted — the state a
     // crash between the write and the entry leaves) is invisible...
-    val entries = GenManifest.readLedger(spark, indexDir).get
+    val entries = GenManifest.readLedger(spark, indexDir)
     GenManifest.writeLedger(spark, indexDir, entries.filterNot(_.tomb))
     assert(pairs() === Seq((11L, 1L)), "torn (uncommitted) delete was applied")
     // ...until its replay commits it again
@@ -1909,7 +1898,7 @@ class OpsSpec extends SparkSuite {
     def decision(): Boolean = {
       val (out, _, release) = Dedup.nearDupCheckWithProbe(spark, indexDir,
         Seq(990001L -> seeded).toDF("doc_id", "text"), threshold = 0.4,
-        belowBatch = Long.MaxValue, prefixLen = 2, broadcastProbe = true,
+        belowBatch = Long.MaxValue, broadcastProbe = true,
         exactFallback = false, twoStage = None,
         twoStageFloor = Dedup.cellMassTailFloor)
       out.collect()
